@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -2013,7 +2014,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     val pkRe = """(?is)ALTER\s+TABLE\s+([\w"]+)\s+ADD\s+(?:CONSTRAINT\s+[\w"]+\s+)?PRIMARY\s+KEY\s*\(([^)]*)\)\s*""".r
     // ADD CONSTRAINT forms (reference kv/KvQueryExecutor.java:2877-3153:
     // FK is recorded as metadata; enforcement here happens on every later
-    // INSERT/UPDATE through validateBatch()).
+    // INSERT/UPDATE through validationParts).
     // trailing ON DELETE/ON UPDATE actions accepted + ignored (reference
     // records FK actions as metadata only)
     val fkRe = """(?is)ALTER\s+TABLE\s+([\w"]+)\s+ADD\s+(?:CONSTRAINT\s+[\w"]+\s+)?FOREIGN\s+KEY\s*\(([\w"]+)\)\s*REFERENCES\s+([\w"]+)\s*\(([\w"]+)\)\s*(?:ON\s+(?:DELETE|UPDATE)\s+.*)?""".r
@@ -2025,14 +2026,15 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         val pk = colsS.split(",").map(_.trim.replaceAll("\"", "").toLowerCase).toSeq
         pk.foreach(k => require(t.column(k).isDefined, s"no column $k"))
         // the new key must actually hold on existing rows, and the key
-        // columns become NOT NULL — otherwise checkUnique/validate would
-        // never enforce the added PK (rowid tables included)
-        val cur = tableDf(t)
-        if (cur.filter(pk.map(col(_).isNull).reduce(_ || _)).limit(1).count() > 0)
+        // columns become NOT NULL — otherwise DML validation would never
+        // enforce the added PK (rowid tables included). NULLs and
+        // duplicates are one aggregate; NULLs are reported first.
+        val (counted, dups) = keyDuplicates(tableDf(t), pk, "__kc")
+        val r = counted.agg(count(when(!allSet(pk), lit(1))), dups).collect()(0)
+        if (r.getLong(0) > 0)
           throw new IllegalArgumentException(
             s"cannot ADD PRIMARY KEY: NULLs present in (${pk.mkString(",")})")
-        if (cur.groupBy(pk.map(col): _*).count()
-            .filter(col("count") > 1).limit(1).count() > 0)
+        if (r.getLong(1) > 0)
           throw new IllegalArgumentException(
             s"cannot ADD PRIMARY KEY: existing duplicates on (${pk.mkString(",")})")
         catalog.putTable(t.copy(primaryKey = pk,
@@ -2106,9 +2108,8 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         t.copy(columns = t.columns.map(c =>
           if (c.name == ks.head) c.copy(unique = true) else c))
       else t.copy(uniqueKeys = t.uniqueKeys :+ ks)
-    val allSet = ks.map(col(_).isNotNull).reduce(_ && _)
-    if (tableDf(nt).filter(allSet).groupBy(ks.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).count() > 0)
+    val (counted, dups) = keyDuplicates(tableDf(nt), ks, "__kc")
+    if (counted.agg(dups).collect()(0).getLong(0) > 0)
       throw new IllegalArgumentException(
         s"cannot ADD UNIQUE: existing duplicates on (${ks.mkString(",")})")
     catalog.putTable(nt)
@@ -2645,66 +2646,53 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     (t.columns.filter(_.unique).map(c => Seq(c.name)) ++ t.uniqueKeys ++
       (if (t.primaryKey.nonEmpty) Seq(t.primaryKey) else Nil)).distinct
 
-  /** ONE-JOB batch validation (the `pipeline_expectations` one-scan-
-    * k-checks shape): row-local constraints (NOT NULL / enum / JSON,
-    * reference kv/KvQueryExecutor.java:4276-4583 validates per row),
-    * FK orphan detection, in-frame unique-key duplicates, and key
-    * conflicts against an existing snapshot ALL evaluate in a single
-    * conditional aggregate over ONE scan of `rows`. Adding a constraint
-    * widens the aggregate; it never adds a Spark job — the sequential
-    * form this replaces ran 1 + #FK + 2·#uniqueKeys separate jobs per
-    * DML statement, each paying full job-launch latency on
-    * batch-sized data. FK parents and existing-table keys enter the
-    * same plan as DISTINCT key projections left-joined to the batch
-    * (distinct, so a duplicated parent key can never multiply rows
-    * under the counting aggregates); in-frame duplicate detection is
-    * count vs count-distinct per key set.
-    *
-    * Failure ORDER matches the sequential implementation: row-local
-    * first, then FK in declaration order, then in-frame duplicates,
-    * then existing-row conflicts. Postgres NULL semantics throughout: a
-    * key containing any NULL is always distinct (NULL-keyed rows are
-    * excluded from both unique counts, and equality joins never match
-    * NULL). `dupMsg`/`conflictMsg` let the DML verbs keep their
-    * statement-specific messages.
-    *
-    * Returns the batch row count under "__total" plus one entry per
-    * `tagCounts` condition — DML verbs that previously ran separate
-    * count() jobs (rows-updated / rows-inserted tallies) ride the same
-    * aggregate for free. */
-  private def validateBatch(t: TableDef, rows: DataFrame,
-      dupKeys: Seq[Seq[String]] = Nil,
-      dupMsg: Seq[String] => String =
-        k => s"UNIQUE violation within batch: ${k.mkString(",")}",
-      conflictsWith: Option[DataFrame] = None,
-      conflictMsg: Seq[String] => String = k => "",
-      tagCounts: Seq[(String, Column)] = Nil): Map[String, Long] = {
-    val (joined, aggs, check) = validationParts(t, rows, dupKeys, dupMsg,
-      conflictsWith, conflictMsg, tagCounts, distinctViaCollectSet = false)
-    val r = joined.agg(aggs.head, aggs.tail: _*).collect()(0)
-    check(name => r.getAs[Any](name))
-  }
+  /** A key with any NULL part is never equal to another key (PG unique
+    * semantics), so it can neither duplicate nor conflict. */
+  private def allSet(k: Seq[String]): Column = k.map(col(_).isNotNull).reduce(_ && _)
 
-  /** The three pieces of [[validateBatch]] — the joined validation frame,
-    * the aggregate columns, and the checker that replays the contract's
-    * failure ORDER over the collected aggregate row — factored out so the
-    * classic collect-job path and the observe-fused write path (see
-    * [[publishFused]]/[[appendFused]]) share ONE definition of the
-    * semantics. `distinctViaCollectSet` spells the in-frame duplicate
-    * detector as size(collect_set(...)) instead of countDistinct:
-    * CollectMetrics (Dataset.observe) rejects DISTINCT aggregates, and
-    * the two agree exactly — both ignore NULL inputs, and the
-    * when(allSet, struct(...)) argument is NULL precisely when the key
-    * has a NULL part (PG semantics: NULL-keyed rows never conflict).
-    * The checker reads every aggregate through a name→value getter so a
-    * Spark Row and an Observation's Map drive the identical code. */
-  private def validationParts(t: TableDef, rows: DataFrame,
-      dupKeys: Seq[Seq[String]],
+  /** The duplicate-key detector, shared by DML validation and ALTER's
+    * constraint backfill: `df` gains column `name`, the number of rows
+    * sharing each row's key `k` (a window count), and the returned
+    * aggregate counts the rows whose key is fully set and occurs more
+    * than once. The window groups NULL keys together, so the [[allSet]]
+    * guard is what keeps a key with a NULL part from ever counting. */
+  private def keyDuplicates(df: DataFrame, k: Seq[String], name: String): (DataFrame, Column) =
+    (df.withColumn(name, count(lit(1)).over(Window.partitionBy(k.map(col): _*))),
+      count(when(allSet(k) && col(name) > 1, lit(1))))
+
+  /** DML validation as ONE set of aggregates riding the statement's own
+    * snapshot write (Dataset.observe, see [[observedWrite]]): row-local
+    * constraints (NOT NULL / enum / JSON; the reference validates per row,
+    * kv/KvQueryExecutor.java:4276-4583), FK orphans, in-frame unique-key
+    * duplicates and key conflicts against an existing snapshot all
+    * evaluate over the one scan of `rows` the write makes. Adding a
+    * constraint widens the aggregate; it never adds a Spark job. FK
+    * parents and existing-table keys enter the plan as DISTINCT key
+    * projections left-joined to the rows (distinct, so a duplicated
+    * parent key never multiplies rows under the counts).
+    *
+    * In-frame duplicates are [[keyDuplicates]]' window count, not a
+    * distinct count: observe rejects DISTINCT aggregates, and a
+    * set-collecting aggregate that gets round it merges every key on the
+    * driver. The window keeps the check distributed and every observed
+    * metric O(1) on the driver, so one path serves statements of every
+    * size. When `single` (a tiny statement, see [[singleFile]]) the rows
+    * are coalesced to one partition first, which already satisfies the
+    * windows' clustering, so they add no shuffle.
+    *
+    * The checker replays the failure ORDER over the observed metrics:
+    * row-local first, then FK in declaration order, then in-frame
+    * duplicates, then existing-row conflicts (equality joins never match
+    * a NULL key part). `dupMsg`/`conflictMsg` keep the DML verbs'
+    * statement-specific messages. It reads every metric through a
+    * name→value getter and returns the row count under "__total" plus one
+    * entry per `tagCounts` condition, so the verbs' affected-row tallies
+    * ride the same aggregate. */
+  private def validationParts(t: TableDef, rows: DataFrame, single: Boolean,
       dupMsg: Seq[String] => String,
       conflictsWith: Option[DataFrame],
       conflictMsg: Seq[String] => String,
-      tagCounts: Seq[(String, Column)],
-      distinctViaCollectSet: Boolean)
+      tagCounts: Seq[(String, Column)])
       : (DataFrame, Seq[Column], (String => Any) => Map[String, Long]) = {
     val rowChecks: Seq[(String, Column)] =
       t.columns.filter(c => c.notNull && !c.serial).map(c =>
@@ -2729,8 +2717,14 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       if (rowChecks.isEmpty) lit(null).cast("string")
       else coalesce(rowChecks.map { case (msg, cond) => when(cond, lit(msg)) } :+
         lit(null).cast("string"): _*)
+    val keySets = uniqueKeySets(t)
+    var joined = (if (single) rows.coalesce(1) else rows).withColumn("__cviol", violCol)
+    val dups = keySets.zipWithIndex.map { case (k, j) =>
+      val (counted, dup) = keyDuplicates(joined, k, s"__kc$j")
+      joined = counted
+      dup.as(s"__dup$j")
+    }
     val fks = t.columns.filter(_.references.isDefined)
-    var joined = rows.withColumn("__cviol", violCol)
     fks.zipWithIndex.foreach { case (c, i) =>
       val (rt, rc) = c.references.get
       val parent = catalog.getTable(rt).getOrElse(
@@ -2739,11 +2733,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         tableDf(parent).select(col(rc).as(s"__fkp$i")).distinct(),
         col(c.name) === col(s"__fkp$i"), "left")
     }
-    val keySets = dupKeys.distinct
     conflictsWith.foreach { existing =>
       keySets.zipWithIndex.foreach { case (k, j) =>
-        val allSet = k.map(col(_).isNotNull).reduce(_ && _)
-        val proj = existing.filter(allSet)
+        val proj = existing.filter(allSet(k))
           .select(k.zipWithIndex.map { case (c0, x) => col(c0).as(s"__ex${j}_$x") }: _*)
           .distinct()
         val cond = k.zipWithIndex.map { case (c0, x) =>
@@ -2756,14 +2748,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       fks.zipWithIndex.map { case (c, i) =>
         sum(when(col(c.name).isNotNull && col(s"__fkp$i").isNull, 1L)
           .otherwise(0L)).as(s"__orph$i") } ++
-      keySets.zipWithIndex.flatMap { case (k, j) =>
-        val allSet = k.map(col(_).isNotNull).reduce(_ && _)
-        val dst =
-          if (distinctViaCollectSet)
-            size(collect_set(when(allSet, struct(k.map(col): _*))))
-          else countDistinct(when(allSet, struct(k.map(col): _*)))
-        Seq(count(when(allSet, lit(1))).as(s"__cnt$j"), dst.as(s"__dst$j"))
-      } ++
+      dups ++
       (if (conflictsWith.isDefined)
         keySets.zipWithIndex.map { case (_, j) =>
           sum(when(col(s"__ex${j}_0").isNotNull, 1L).otherwise(0L)).as(s"__conf$j") }
@@ -2772,9 +2757,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       tagCounts.map { case (name, cond) =>
         sum(when(cond, 1L).otherwise(0L)).as(s"__tag_$name") }
     val check: (String => Any) => Map[String, Long] = get => {
-      // size() yields Int where countDistinct yields Long, and sum()
-      // over ZERO rows yields NULL (which Row.getAs[Long] silently
-      // unboxed to 0 in the classic path) — normalize both
+      // sum() over ZERO rows yields NULL: normalize it to 0
       def lng(n: String): Long =
         Option(get(n)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
       Option(get("__viol").asInstanceOf[String])
@@ -2787,7 +2770,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         }
       }
       keySets.zipWithIndex.foreach { case (k, j) =>
-        if (lng(s"__cnt$j") > lng(s"__dst$j"))
+        if (lng(s"__dup$j") > 0)
           throw new IllegalArgumentException(dupMsg(k))
       }
       if (conflictsWith.isDefined) keySets.zipWithIndex.foreach { case (k, j) =>
@@ -2800,57 +2783,32 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     (joined, aggs, check)
   }
 
-  /** INSERT-shape validation: row-local + FK + in-batch duplicates +
-    * conflicts vs the existing snapshot, one job (reference
-    * kv/KvQueryExecutor.java:4301-4386 scans per row). */
-  private def validateInsert(t: TableDef, newRows: DataFrame,
-      existing: DataFrame,
-      tagCounts: Seq[(String, Column)] = Nil): Map[String, Long] =
-    validateBatch(t, newRows, dupKeys = uniqueKeySets(t),
-      conflictsWith = Some(existing),
-      conflictMsg = k => s"UNIQUE violation: ${t.name}(${k.mkString(",")})",
-      tagCounts = tagCounts)
-
-  /** Post-image validation for UPDATE/MERGE/upsert: row-local + FK +
-    * whole-table uniqueness of the rewritten snapshot, one job. */
-  private def validatePostImage(t: TableDef, next: DataFrame,
-      verb: String, tagCounts: Seq[(String, Column)] = Nil): Map[String, Long] =
-    validateBatch(t, next, dupKeys = uniqueKeySets(t),
-      dupMsg = k => s"UNIQUE violation after $verb: ${k.mkString(",")}",
-      tagCounts = tagCounts)
-
-  /** [[validateInsert]] fused with the append itself: the same joins and
-    * aggregates ride the staged write's job (see [[appendFused]]) — ONE
-    * Spark job per INSERT instead of validate-collect + write. */
-  private def insertFusedAppend(t: TableDef, newRows: DataFrame,
-      tagCounts: Seq[(String, Column)] = Nil): Map[String, Long] = {
-    val (joined, aggs, check) = validationParts(t, newRows,
-      dupKeys = uniqueKeySets(t),
+  /** INSERT validation (in-batch duplicates and conflicts with the
+    * existing snapshot included) riding the staged append's write (see
+    * [[appendFused]]), no separate validation job. Returns the number of
+    * rows appended. */
+  private def insertFusedAppend(t: TableDef, newRows: DataFrame): Long = {
+    val single = singleFile(newRows)
+    val (joined, aggs, check) = validationParts(t, newRows, single,
       dupMsg = k => s"UNIQUE violation within batch: ${k.mkString(",")}",
       conflictsWith = Some(tableDf(t)),
       conflictMsg = k => s"UNIQUE violation: ${t.name}(${k.mkString(",")})",
-      tagCounts = tagCounts, distinctViaCollectSet = true)
-    appendFused(t, joined, aggs, check)
+      tagCounts = Nil)
+    appendFused(t, joined, aggs, single, check)("__total")
   }
 
-  /** [[validatePostImage]] fused with the snapshot publish (see
-    * [[publishFused]]): ONE Spark job per UPDATE/MERGE/upsert statement,
-    * with `extraCheck` (verb-specific preconditions whose contract places
-    * them BEFORE the validation throws — upsert's batch-duplicate rule,
-    * MERGE's affect-twice rule) evaluated first and `beforePublish`
-    * (RETURNING pins) after every check passed. */
+  /** Post-image validation for UPDATE/MERGE/upsert (row-local + FK +
+    * whole-table uniqueness of the rewritten snapshot) riding the publish
+    * write (see [[publishFused]]), no separate validation job, with
+    * `beforePublish` (RETURNING pins) run after every check passed. */
   private def validatePostImagePublish(t: TableDef, tagged: DataFrame,
-      verb: String, tagCounts: Seq[(String, Column)] = Nil,
-      keepFilter: Option[Column] = None,
-      extraCheck: () => Unit = () => (),
+      verb: String, single: Boolean, tagCounts: Seq[(String, Column)] = Nil,
       beforePublish: () => Unit = () => ()): Map[String, Long] = {
-    val (joined, aggs, check) = validationParts(t, tagged,
-      dupKeys = uniqueKeySets(t),
+    val (joined, aggs, check) = validationParts(t, tagged, single,
       dupMsg = k => s"UNIQUE violation after $verb: ${k.mkString(",")}",
-      conflictsWith = None, conflictMsg = k => "",
-      tagCounts = tagCounts, distinctViaCollectSet = true)
-    publishFused(t, joined, aggs, keepFilter,
-      get => { extraCheck(); check(get) }, beforePublish)
+      conflictsWith = None, conflictMsg = _ => "",
+      tagCounts = tagCounts)
+    publishFused(t, joined, aggs, None, single, check, beforePublish)
   }
 
   /** Top-level (outside single-quoted literals AND double-quoted
@@ -3110,16 +3068,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     try {
       conflict match {
         case None =>
-          if (smallForFusion(aligned)) {
-            // validation rides the append's write job (observe-fused,
-            // ONE Spark job); a violation discards the staged files
-            insertFusedAppend(t, aligned)
-          } else {
-            validateInsert(t, aligned, tableDf(t))
-            val dir = catalog.tableDir(t)
-            Files.createDirectories(dir)
-            writeSnapshot(aligned, "append", dir.toString)
-          }
+          // validation rides the append's write job (observe-fused, ONE
+          // Spark job); a violation discards the staged files
+          insertFusedAppend(t, aligned)
           dataGen += 1 // append is invisible to the catalog generation
           returning.map(r => returningDf(t, aligned, r)).getOrElse(ok("INSERT", n))
         case Some(OnConflictClause(target, byCon, None)) =>
@@ -3143,38 +3094,26 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * like PG. */
   private def insertDoNothing(t: TableDef, aligned: DataFrame,
       target: Seq[String], returning: Option[String]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val keySets = conflictKeySets(t, target)
     // Rows conflicting with the EXISTING table never insert and never
     // block later batch rows, so peel them first. The left_anti equality
     // join is null-safe by construction: a NULL key never equals anything,
     // so NULL-keyed rows pass through.
     var surv = aligned.withColumn("__ord", monotonically_increasing_id())
-    for (k <- keySets) {
-      val allSet = k.map(col(_).isNotNull).reduce(_ && _)
-      surv = surv.join(tableDf(t).filter(allSet).select(k.map(col): _*), k, "left_anti")
-    }
+    for (k <- keySets)
+      surv = surv.join(tableDf(t).filter(allSet(k)).select(k.map(col): _*), k, "left_anti")
     val out = (if (keySets.size == 1) {
       // one constraint: first-in-group inserts, the rest conflict with it
       // (if the first occurrence hit the existing table, so did the rest —
       // same key — so the pre-peel cannot change which row is first)
       val k = keySets.head
-      val allSet = k.map(col(_).isNotNull).reduce(_ && _)
       val w = Window.partitionBy(k.map(col): _*).orderBy(col("__ord"))
       surv.withColumn("__rn", row_number().over(w))
-        .filter(!allSet || col("__rn") === 1).drop("__rn")
+        .filter(!allSet(k) || col("__rn") === 1).drop("__rn")
     } else resolveBatchConflicts(surv, keySets)).drop("__ord")
-    // the kept-row tally rides the validation aggregate (one job),
-    // and when the batch is small the whole aggregate rides the write
-    val kept =
-      if (smallForFusion(aligned)) insertFusedAppend(t, out)("__total")
-      else {
-        val k = validateInsert(t, out, tableDf(t))("__total")
-        val dir = catalog.tableDir(t)
-        Files.createDirectories(dir)
-        writeSnapshot(out, "append", dir.toString)
-        k
-      }
+    // the kept-row tally rides the validation aggregate, which rides the
+    // append's write job
+    val kept = insertFusedAppend(t, out)
     dataGen += 1
     returning.map(r => returningDf(t, out, r)).getOrElse(ok("INSERT", kept))
   }
@@ -3196,7 +3135,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * label-propagation loop does. */
   private def resolveBatchConflicts(batch: DataFrame,
       keySets: Seq[Seq[String]]): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     var undecided = batch.localCheckpoint()
     var accepted: DataFrame = null
     // Termination guard without taxing the fast path: each round provably
@@ -3220,17 +3158,14 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       var d = undecided
       val flags = keySets.indices.map("__first" + _)
       keySets.zipWithIndex.foreach { case (k, i) =>
-        val allSet = k.map(col(_).isNotNull).reduce(_ && _)
         val w = Window.partitionBy(k.map(col): _*).orderBy(col("__ord"))
-        d = d.withColumn(flags(i), !allSet || row_number().over(w) === 1)
+        d = d.withColumn(flags(i), !allSet(k) || row_number().over(w) === 1)
       }
       val firstInAll = flags.map(col).reduce(_ && _)
       val acc = d.filter(firstInAll).drop(flags: _*).localCheckpoint()
       var rest = d.filter(!firstInAll).drop(flags: _*)
-      for (k <- keySets) {
-        val allSet = k.map(col(_).isNotNull).reduce(_ && _)
-        rest = rest.join(acc.filter(allSet).select(k.map(col): _*), k, "left_anti")
-      }
+      for (k <- keySets)
+        rest = rest.join(acc.filter(allSet(k)).select(k.map(col): _*), k, "left_anti")
       accepted = if (accepted == null) acc else accepted.unionByName(acc)
       undecided = rest.localCheckpoint()
     }
@@ -3248,9 +3183,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
   private def upsertDoUpdate(t: TableDef, aligned: DataFrame, target: Seq[String],
       setS: String, whereOpt: Option[String], returning: Option[String]): DataFrame = {
     val k = conflictKeySets(t, target).head
-    val allSet = k.map(col(_).isNotNull).reduce(_ && _)
+    val keySet = allSet(k)
     // PG: one statement cannot update the same existing row twice
-    if (aligned.filter(allSet).groupBy(k.map(col): _*).count()
+    if (aligned.filter(keySet).groupBy(k.map(col): _*).count()
         .filter(col("count") > 1).limit(1).count() > 0)
       throw new IllegalArgumentException(
         "ON CONFLICT DO UPDATE cannot affect a row a second time: " +
@@ -3274,8 +3209,8 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     val skipped = matched.filter(!wherePred || wherePred.isNull)
       .select(t.columns.map(c => col(c.name)): _*)
     val untouched = existing.join(
-      aligned.filter(allSet).select(k.map(col): _*), k, "left_anti")
-    val fresh = aligned.join(existing.filter(allSet).select(k.map(col): _*), k, "left_anti")
+      aligned.filter(keySet).select(k.map(col): _*), k, "left_anti")
+    val fresh = aligned.join(existing.filter(keySet).select(k.map(col): _*), k, "left_anti")
     // tag row provenance so the updated/inserted tallies ride the
     // validation aggregate instead of two extra count() jobs; the tag
     // never reaches the published snapshot
@@ -3285,30 +3220,19 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       .unionByName(fresh.withColumn("__src", lit("ins")))
     val upsertTags = Seq("up" -> (col("__src") === "up"),
       "ins" -> (col("__src") === "ins"))
-    if (smallForFusion(existing) && smallForFusion(aligned)) {
-      // fused: row-local + FK + post-merge uniqueness + the up/ins
-      // tallies ALL ride the publish write's job (observe) — the
-      // statement's merge-validate-count-write collapses to ONE job
-      var ret: Option[DataFrame] = None
-      val counts = validatePostImagePublish(t, tagged, "upsert",
-        tagCounts = upsertTags,
-        beforePublish = () =>
-          ret = returning.map(r => returningDf(t, updated.unionByName(fresh), r)))
-      ret.getOrElse(ok("INSERT", counts("up") + counts("ins")))
-    } else {
-      val next = tagged.drop("__src")
-      // row-local + FK + post-merge whole-table uniqueness (the SET
-      // expressions or a different unique key could collide) + the
-      // updated/inserted counts, ONE job
-      val counts = validatePostImage(t, tagged, "upsert", tagCounts = upsertTags)
-      val nUp = counts("up")
-      val nIns = counts("ins")
-      // RETURNING sees the post-image of every inserted or updated row;
-      // pin it before publish supersedes the snapshot this plan reads
-      val ret = returning.map(r => returningDf(t, updated.unionByName(fresh), r))
-      publish(t, next)
-      ret.getOrElse(ok("INSERT", nUp + nIns))
-    }
+    // row-local + FK + post-merge whole-table uniqueness (the SET
+    // expressions or a different unique key could collide) + the up/ins
+    // tallies ALL ride the publish write's job (observe). RETURNING sees
+    // the post-image of every inserted or updated row, pinned before the
+    // publish supersedes the snapshot this plan reads. The post-image is
+    // a join of the two inputs, which the optimizer prices at their
+    // product, so the write layout is sized by the inputs themselves.
+    var ret: Option[DataFrame] = None
+    val counts = validatePostImagePublish(t, tagged, "upsert",
+      single = singleFile(existing, aligned), tagCounts = upsertTags,
+      beforePublish = () =>
+        ret = returning.map(r => returningDf(t, updated.unionByName(fresh), r)))
+    ret.getOrElse(ok("INSERT", counts("up") + counts("ins")))
   }
 
   /** Split `body` at the first top-level occurrence of keyword `kw` —
@@ -3384,30 +3308,17 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         def retDf(r: String): DataFrame = returningDf(t,
           cur.filter(pred).select(t.columns.map(c =>
             assign.getOrElse(c.name, col(c.name)).as(c.name)): _*), r)
-        if (smallForFusion(cur)) {
-          // fused: the changed-row tally AND the post-image validation
-          // ride the publish write's job — 3 Spark jobs become 1
-          val tagged = cur.select((t.columns.map(c =>
-            assign.get(c.name).map(a => when(pred, a).otherwise(col(c.name)))
-              .getOrElse(col(c.name)).as(c.name)) :+ pred.as("__chg")): _*)
-          var ret: Option[DataFrame] = None
-          val counts = validatePostImagePublish(t, tagged, "UPDATE",
-            tagCounts = Seq("chg" -> col("__chg")),
-            beforePublish = () => ret = returning.map(retDf))
-          ret.getOrElse(ok("UPDATE", counts("chg")))
-        } else {
-          val nChanged = cur.filter(pred).count()
-          val next = cur.select(t.columns.map(c =>
-            assign.get(c.name).map(a => when(pred, a).otherwise(col(c.name)))
-              .getOrElse(col(c.name)).as(c.name)): _*)
-          // row-local + FK + post-update whole-table uniqueness, one job
-          validatePostImage(t, next, "UPDATE")
-          // RETURNING: the post-image of the updated rows (PG), pinned
-          // before publish supersedes the snapshot this plan reads
-          val ret = returning.map(retDf)
-          publish(t, next)
-          ret.getOrElse(ok("UPDATE", nChanged))
-        }
+        // the changed-row tally AND the post-image validation ride the
+        // publish write's job; RETURNING (the post-image of the updated
+        // rows, PG) is pinned before the publish supersedes this snapshot
+        val tagged = cur.select((t.columns.map(c =>
+          assign.get(c.name).map(a => when(pred, a).otherwise(col(c.name)))
+            .getOrElse(col(c.name)).as(c.name)) :+ pred.as("__chg")): _*)
+        var ret: Option[DataFrame] = None
+        val counts = validatePostImagePublish(t, tagged, "UPDATE", singleFile(cur),
+          tagCounts = Seq("chg" -> col("__chg")),
+          beforePublish = () => ret = returning.map(retDf))
+        ret.getOrElse(ok("UPDATE", counts("chg")))
       case _ => throw new IllegalArgumentException(s"cannot parse UPDATE: $stmt")
     }
   }
@@ -3480,21 +3391,12 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         }: _*)
       returningDf(t, post, r)
     }
-    val out = if (smallForFusion(cur)) {
-      // fused: post-image validation rides the publish write's job
-      var ret: Option[DataFrame] = None
-      validatePostImagePublish(t, next, "UPDATE",
-        beforePublish = () => ret = returning.map(retDf))
-      ret.getOrElse(ok("UPDATE", nChanged))
-    } else {
-      // row-local + FK + post-update whole-table uniqueness, one job
-      validatePostImage(t, next, "UPDATE")
-      val ret = returning.map(retDf)
-      publish(t, next)
-      ret.getOrElse(ok("UPDATE", nChanged))
-    }
+    // post-image validation rides the publish write's job
+    var ret: Option[DataFrame] = None
+    validatePostImagePublish(t, next, "UPDATE", singleFile(cur),
+      beforePublish = () => ret = returning.map(retDf))
     spark.catalog.dropTempView(tv)
-    out
+    ret.getOrElse(ok("UPDATE", nChanged))
   }
 
   private def delete(stmt: String): DataFrame = {
@@ -3516,26 +3418,19 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         }
         val cur = tableDf(t)
         val pred = Option(whereS).map(w => expr(PgRewrite.rewrite(w))).getOrElse(lit(true))
-        if (smallForFusion(cur)) {
-          // fused: the deleted-row tally observes the PRE-filter rows of
-          // the publish write's own job — 3 Spark jobs become 1 (DELETE
-          // validates nothing: surviving rows were all valid at insert)
-          var ret: Option[DataFrame] = None
-          val nDel = publishFused(t, cur.withColumn("__del", pred),
-            Seq(sum(when(col("__del"), 1L).otherwise(0L)).as("__tag_del")),
-            keepFilter = Some(!col("__del") || col("__del").isNull),
-            check = get => get("__tag_del").asInstanceOf[Number].longValue,
-            beforePublish =
-              () => ret = returning.map(r => returningDf(t, cur.filter(pred), r)))
-          ret.getOrElse(ok("DELETE", nDel))
-        } else {
-          val keep = cur.filter(!pred || pred.isNull) // SQL: delete rows where pred is TRUE
-          val nDel = cur.count() - keep.count()
-          // RETURNING: the deleted rows' old values (PG), pinned pre-publish
-          val ret = returning.map(r => returningDf(t, cur.filter(pred), r))
-          publish(t, keep)
-          ret.getOrElse(ok("DELETE", nDel))
-        }
+        // the deleted-row tally observes the PRE-filter rows of the
+        // publish write's own job (DELETE validates nothing: surviving
+        // rows were all valid at insert); SQL deletes rows where pred is
+        // TRUE; RETURNING pins the deleted rows' old values (PG)
+        var ret: Option[DataFrame] = None
+        val nDel = publishFused(t, cur.withColumn("__del", pred),
+          Seq(sum(when(col("__del"), 1L).otherwise(0L)).as("__tag_del")),
+          keepFilter = Some(!col("__del") || col("__del").isNull),
+          single = singleFile(cur),
+          check = get => get("__tag_del").asInstanceOf[Number].longValue,
+          beforePublish =
+            () => ret = returning.map(r => returningDf(t, cur.filter(pred), r)))
+        ret.getOrElse(ok("DELETE", nDel))
       case _ => throw new IllegalArgumentException(s"cannot parse DELETE: $stmt")
     }
   }
@@ -3763,7 +3658,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       nUpd = r.getAs[Long]("u"); nDel = r.getAs[Long]("dd")
     }
 
-    var insSmall = true // batch-sized insert arm, measured pre-checkpoint
     val inserted: Option[DataFrame] = if (insWs.isEmpty) None else {
       val maps = insWs.map {
         case MergeWhen(_, _, MergeInsert(m)) => m
@@ -3813,9 +3707,8 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       }
       val plan = ins.select(t.columns.map(c =>
         col(c.name).cast(TypeMap.toSpark(c.sqlType)).as(c.name)): _*)
-      insSmall = smallForFusion(plan)
-      // lazy: the first consumer's job (the count, or the fused publish
-      // write) materializes the blocks — no separate checkpoint job
+      // lazy: the publish write's job materializes the blocks — no
+      // separate checkpoint job
       Some(plan.localCheckpoint(false))
     }
 
@@ -3839,31 +3732,22 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         inserted).flatten
       returningDf(t, acted.reduceOption(_ unionByName _).getOrElse(cur.limit(0)), r)
     }
-    val result = if (smallForFusion(cur) && insSmall) {
-      // fused: the inserted tally AND the post-merge validation ride the
-      // publish write's job — validate-count-write collapses to ONE job
-      val taggedNext = inserted match {
-        case Some(i) => afterMatched.withColumn("__src", lit("keep"))
-          .unionByName(i.withColumn("__src", lit("ins")))
-        case None => afterMatched.withColumn("__src", lit("keep"))
-      }
-      var ret: Option[DataFrame] = None
-      val counts = validatePostImagePublish(t, taggedNext, "MERGE",
-        tagCounts = Seq("ins" -> (col("__src") === "ins")),
-        beforePublish = () => ret = returning.map(mergeRet))
-      ret.getOrElse(ok("MERGE", nUpd + nDel + counts("ins")))
-    } else {
-      val nIns = inserted.map(_.count()).getOrElse(0L)
-      val next = inserted.map(afterMatched.unionByName(_)).getOrElse(afterMatched)
-      // row-local + FK + post-merge whole-table uniqueness (SET
-      // expressions or inserts could collide on any unique key), one job
-      validatePostImage(t, next, "MERGE")
-      val ret = returning.map(mergeRet)
-      publish(t, next)
-      ret.getOrElse(ok("MERGE", nUpd + nDel + nIns))
+    // the inserted tally AND the post-merge validation (SET expressions
+    // or inserts could collide on any unique key) ride the publish
+    // write's job; the write layout is sized by the statement's inputs,
+    // since the optimizer prices the matched-arm join at its product
+    val taggedNext = inserted match {
+      case Some(i) => afterMatched.withColumn("__src", lit("keep"))
+        .unionByName(i.withColumn("__src", lit("ins")))
+      case None => afterMatched.withColumn("__src", lit("keep"))
     }
+    var ret: Option[DataFrame] = None
+    val counts = validatePostImagePublish(t, taggedNext, "MERGE",
+      singleFile(cur +: inserted.toSeq: _*),
+      tagCounts = Seq("ins" -> (col("__src") === "ins")),
+      beforePublish = () => ret = returning.map(mergeRet))
     completed = true
-    result
+    ret.getOrElse(ok("MERGE", nUpd + nDel + counts("ins")))
     } finally {
       spark.catalog.dropTempView(tv)
       if (insCache != null) insCache.unpersist()
@@ -3885,85 +3769,72 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     graft.streaming.MatviewMaintenance.onSnapshotChange(catalog.root.toString)
   }
 
-  /** Parquet write of a table/matview snapshot with SIZE-ADAPTIVE file
-    * fan-out. A VALUES insert arrives as a LocalRelation whose rows
-    * spread one-per-partition, so a 3-row statement wrote 3 part files
-    * and scheduled 3 tasks — and every later read of the snapshot paid
-    * the listing and per-file open cost, compounding across a script's
-    * COW versions. When the optimizer's size estimate says the output is
-    * tiny, coalesce to ONE file; the threshold is deliberately small so
-    * a misestimated-but-large output keeps the parallel write (coalesce
-    * collapses only the stage below the nearest exchange, so an
-    * aggregate/join snapshot keeps its parallel upstream either way). */
-  private def writeSnapshot(df: DataFrame, mode: String, dir: String): Unit = {
-    // The byte estimate costs strings at a fixed ~20 B, so a snapshot of
-    // many rows × wide TEXT cells can land under the byte gate while the
-    // real output is hundreds of MB — a serial-write straggler. When the
-    // optimizer KNOWS the row count (VALUES inserts, CBO-analyzed
-    // sources), cap the single-file branch at 100k rows; unknown row
-    // counts keep the byte gate alone (parquet-scan-backed snapshots,
-    // whose file-byte estimate is not string-blind).
-    val small =
-      try {
-        val st = df.queryExecution.optimizedPlan.stats
-        st.sizeInBytes <= BigInt(8L << 20) && st.rowCount.forall(_ <= 100000L)
-      } catch { case _: Throwable => false }
-    (if (small) df.coalesce(1) else df).write.mode(mode).parquet(dir)
+  /** Parquet write of a table/matview snapshot, laid out by [[singleFile]]. */
+  private def writeSnapshot(df: DataFrame, mode: String, dir: String): Unit =
+    (if (singleFile(df)) df.coalesce(1) else df).write.mode(mode).parquet(dir)
+
+  /** SIZE-ADAPTIVE file fan-out of a snapshot write: ONE part file when
+    * the optimizer estimates every frame of `inputs` as tiny. A VALUES
+    * insert arrives as a LocalRelation whose rows spread one-per-partition,
+    * so a 3-row statement wrote 3 part files and scheduled 3 tasks — and
+    * every later read of the snapshot paid the listing and per-file open
+    * cost, compounding across a script's COW versions. The threshold is
+    * deliberately small so a misestimated-but-large output keeps the
+    * parallel write (coalesce collapses only the stage below the nearest
+    * exchange, so an aggregate/join snapshot keeps its parallel upstream
+    * either way). The byte estimate costs strings at a fixed ~20 B, so a
+    * snapshot of many rows × wide TEXT cells can land under the byte gate
+    * while the real output is hundreds of MB — a serial-write straggler.
+    * When the optimizer KNOWS the row count (VALUES inserts, CBO-analyzed
+    * sources), the single-file branch is capped at 100k rows; unknown row
+    * counts keep the byte gate alone (parquet-scan-backed snapshots, whose
+    * file-byte estimate is not string-blind). DML verbs whose post-image
+    * joins their inputs pass the inputs, since the optimizer prices a
+    * join at the product of its sides. Estimation failures keep the
+    * parallel write. */
+  private def singleFile(inputs: DataFrame*): Boolean = inputs.forall { df =>
+    try {
+      val st = df.queryExecution.optimizedPlan.stats
+      st.sizeInBytes <= BigInt(8L << 20) && st.rowCount.forall(_ <= 100000L)
+    } catch { case _: Throwable => false }
   }
 
   // ------------------------------------------- observe-fused DML writes
   //
-  // A tiny DML statement's floor was 2-3 Spark jobs: the one-job
-  // validation aggregate (validateBatch), the affected-row count(s), and
-  // the snapshot write — each a full job launch (plus AQE stage jobs) on
-  // batch-sized data. Dataset.observe (CollectMetrics) computes the SAME
-  // validation aggregates as a side effect of the write job's scan, so a
-  // small statement runs ONE job: write the rows, then check the observed
-  // metrics in validateBatch's exact failure order. Because the check now
-  // runs AFTER the bytes land, the write targets are arranged so a
-  // validation failure never mutates visible state: publishes go to the
-  // not-yet-published next version dir (deleted on failure, putTable only
-  // on success), appends go to a staging dir whose part files move into
-  // the live snapshot only after the checks pass. The statement holds the
-  // session's write gate throughout, so the window is unobservable.
-  //
-  // Scale guard: the collect_set spelling of the duplicate detector
-  // merges per-partition key sets on the DRIVER (guide §5 — the driver
-  // does no data work), so fusion is gated by [[smallForFusion]]; past
-  // the gate every verb keeps the classic distributed validate-then-write
-  // path unchanged.
+  // Every DML verb validates, counts and writes in ONE pass over its rows:
+  // Dataset.observe (CollectMetrics) computes validationParts' aggregates
+  // and the verb's affected-row tallies as a side effect of the snapshot
+  // write's own scan, and the checker then replays the failure order over
+  // the observed metrics. Observe rejects DISTINCT aggregates, and the
+  // driver must never merge a statement's key sets, so in-batch duplicates
+  // are a distributed window count per unique key set (keyDuplicates) and
+  // every observed metric is O(1) on the driver. One path therefore serves
+  // statements of every size; the write is laid out by singleFile like any
+  // snapshot write. Because the check runs AFTER the bytes land, the write
+  // targets are arranged so a validation failure never mutates visible
+  // state: publishes go to the not-yet-published next version dir (deleted
+  // on failure, putTable only on success), appends go to a staging dir
+  // whose part files move into the live snapshot only after the checks
+  // pass. The statement holds the session's write gate throughout, so the
+  // window is unobservable.
 
   private val obsId = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Fusion gate: the optimizer-estimated size of `df` is batch-like —
-    * under the snapshot single-file threshold AND (when the row count is
-    * known) bounded in rows, so driver-merged metrics stay trivially
-    * small. Estimation failures disable fusion, never enable it.
-    * [[GraftSession.fusionEnabled]] is the test seam that forces every
-    * statement down the classic path, so the equivalence spec can pin
-    * fused == classic on identical scripts. */
-  private def smallForFusion(df: DataFrame): Boolean =
-    GraftSession.fusionEnabled && (
-      try {
-        val st = df.queryExecution.optimizedPlan.stats
-        st.sizeInBytes <= BigInt(8L << 20) && st.rowCount.forall(_ <= 100000L)
-      } catch { case _: Throwable => false })
-
   /** Write `frame` (projected to the table's columns, optionally after
-    * `keepFilter`) to `dir` while computing `aggs` over the PRE-filter
-    * rows via Dataset.observe. Returns the observed metrics getter once
-    * the write completed. ONE Spark job: the metrics ride the write
-    * scan's accumulators (verified: CollectMetrics is not a filter-
-    * pushdown target, so `keepFilter` cannot leak below the metrics). */
+    * `keepFilter`; ONE part file when `single`) to `dir` while computing
+    * `aggs` over the PRE-filter rows via Dataset.observe. Returns the
+    * observed metrics getter once the write completed. No separate
+    * validation job: the metrics ride the write plan's accumulators
+    * (verified: CollectMetrics is not a filter-pushdown target, so
+    * `keepFilter` cannot leak below the metrics). */
   private def observedWrite(t: TableDef, frame: DataFrame, aggs: Seq[Column],
-      keepFilter: Option[Column], dir: String): String => Any = {
+      keepFilter: Option[Column], single: Boolean, dir: String): String => Any = {
     val obs = org.apache.spark.sql.Observation(
       s"graft_val_${obsId.incrementAndGet()}")
     val observed = frame.observe(obs, aggs.head, aggs.tail: _*)
     val out = keepFilter.map(observed.filter).getOrElse(observed)
       .select(t.columns.map(c => col(c.name)): _*)
-    // fusion is size-gated, so the single-file write branch always holds
-    out.coalesce(1).write.mode("overwrite").parquet(dir)
+    (if (single) out.coalesce(1) else out).write.mode("overwrite").parquet(dir)
     val m = obs.get
     m.apply
   }
@@ -3974,12 +3845,12 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * pointer untouched), then run `beforePublish` (RETURNING pins) and
     * publish the version. */
   private def publishFused[A](t: TableDef, frame: DataFrame,
-      aggs: Seq[Column], keepFilter: Option[Column],
+      aggs: Seq[Column], keepFilter: Option[Column], single: Boolean,
       check: (String => Any) => A,
       beforePublish: () => Unit = () => ()): A = {
     val nt = t.copy(version = t.version + 1)
     val dir = catalog.tableDir(nt)
-    val get = observedWrite(t, frame, aggs, keepFilter, dir.toString)
+    val get = observedWrite(t, frame, aggs, keepFilter, single, dir.toString)
     val res =
       try check(get)
       catch { case e: Throwable => deleteRecursively(dir); throw e }
@@ -3993,15 +3864,14 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * the version dirs (VACUUM's v\d+ matcher ignores it), check the
     * observed metrics, and only then move the part files into the live
     * snapshot dir — a validation failure discards the stage and the
-    * snapshot is never touched, exactly like the classic
-    * validate-then-append ordering. */
+    * snapshot is never touched. */
   private def appendFused[A](t: TableDef, frame: DataFrame,
-      aggs: Seq[Column], check: (String => Any) => A): A = {
+      aggs: Seq[Column], single: Boolean, check: (String => Any) => A): A = {
     val dir = catalog.tableDir(t)
     val stage = dir.getParent.resolve(
       s".stage-${System.nanoTime()}-${obsId.incrementAndGet()}")
     try {
-      val get = observedWrite(t, frame, aggs, None, stage.toString)
+      val get = observedWrite(t, frame, aggs, None, single, stage.toString)
       val res = check(get) // throws on violation; stage dies in finally
       Files.createDirectories(dir)
       val s = Files.list(stage)
@@ -4029,13 +3899,6 @@ object GraftSession {
     * registerAll. */
   private[sqlfront] val lastRegistrar =
     new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, Long, Long)](null)
-
-  /** Test seam: force every DML statement down the classic
-    * validate-then-write path (two jobs) instead of the observe-fused
-    * single-job path, so specs can pin the two strategies' equivalence.
-    * Production value is always true — the fusion gate itself
-    * ([[GraftSession#smallForFusion]]) is what bounds it by size. */
-  @volatile private[graft] var fusionEnabled = true
 
   /** Table/view names the last registerAll registered — the next
     * registration for a DIFFERENT catalog sweeps names it does not
