@@ -8,7 +8,7 @@ object Bench {
     // doesn't say which is which poisons the cross-run medians — the r17
     // scaling block was uninterpretable partly because core count had to
     // be guessed from calibration speed (VERDICT r17 §scaling)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Engine.cpus
     val spark = Engine.session("graft-bench")
     // warm up JVM/codegen/file-index paths so per-query timings measure the
     // queries, not first-touch JIT + parquet footer reads. A table that

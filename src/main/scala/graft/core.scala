@@ -95,11 +95,12 @@ object Tables {
   * value, which `adaptive.enabled` already turns on).
   */
 object Engine {
+  /** The local core count every session runs with, and the one source of
+    * it: the default is local[32] with 32 shuffle partitions;
+    * SPARK_GRAFT_CPUS overrides it for smaller machines. */
+  val cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+
   def session(appName: String = "graft"): SparkSession = {
-    // default matches the driver environment (local[32], 32 shuffle
-    // partitions per the build brief); SPARK_GRAFT_CPUS overrides for
-    // smaller dev machines
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .appName(appName)
       .withExtensions(new graft.functions.GraftExtensions)

@@ -71,8 +71,7 @@ object DedupQueries extends QueryPack {
     * and the per-doc set size `n` comes from the ARRAY (size(shingles))
     * instead of a second window, removing one corpus-wide exchange per
     * subtree instance. */
-  private[graft] def jaccardPairsBuild(ss: DataFrame, thr: Double,
-      hashedPrefix: Boolean = true): (DataFrame, DataFrame) = {
+  private[graft] def jaccardPairsBuild(ss: DataFrame, thr: Double): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     require(thr > 0.0 && thr <= 1.0, s"jaccard threshold must be in (0, 1]: $thr")
     // Prefix bound n - floor(thr·n) + 1 for ANY threshold — a superset
@@ -104,15 +103,10 @@ object DedupQueries extends QueryPack {
     //     total order (row_number would instead refine ties arbitrarily
     //     PER DOC, which is exactly the inconsistency the theorem
     //     forbids).
-    val keyed =
-      if (hashedPrefix) "h" else "sh"
-    val sh0 = ss.select(col("doc_id"), size(col("shingles")).as("n"),
-      explode(col("shingles")).as("sh"))
-    val sh =
-      if (hashedPrefix)
-        sh0.select(col("doc_id"), col("n"), xxhash64(col("sh")).as("h"))
-      else sh0
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col(keyed))
+    val sh = ss.select(col("doc_id"), size(col("shingles")).as("n"),
+        explode(col("shingles")).as("sh"))
+      .select(col("doc_id"), col("n"), xxhash64(col("sh")).as("h"))
+    val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("h"))
     // `n` (full per-doc set size → prefix bound) counts the whole set,
     // BEFORE the df>=2 filter; the sorted rank window then runs
     // only over non-singleton shingles. A df=1 shingle can never produce
@@ -124,14 +118,14 @@ object DedupQueries extends QueryPack {
     // the full shingle relation by the key twice; the window computes df
     // on the single exchange the plan needs anyway.
     val prefix = sh
-      .withColumn("df", count(lit(1)).over(Window.partitionBy(col(keyed))))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy(col("h"))))
       .filter(col("df") >= 2)
       .withColumn("pos", rank().over(w))
       .filter(col("pos") <= col("n") - expr(s"($thrNum * n) div 1000000") + 1)
-      .select(col("doc_id"), col(keyed))
+      .select(col("doc_id"), col("h"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cand = prefix.as("x").join(prefix.as("y"),
-        col(s"x.$keyed") === col(s"y.$keyed") && col("x.doc_id") < col("y.doc_id"))
+        col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("a"), col("y.doc_id").as("b"))
       .distinct()
     val inter = size(array_intersect(col("sa"), col("sb")))

@@ -2650,15 +2650,32 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * semantics), so it can neither duplicate nor conflict. */
   private def allSet(k: Seq[String]): Column = k.map(col(_).isNotNull).reduce(_ && _)
 
-  /** The duplicate-key detector, shared by DML validation and ALTER's
-    * constraint backfill: `df` gains column `name`, the number of rows
-    * sharing each row's key `k` (a window count), and the returned
-    * aggregate counts the rows whose key is fully set and occurs more
-    * than once. The window groups NULL keys together, so the [[allSet]]
-    * guard is what keeps a key with a NULL part from ever counting. */
-  private def keyDuplicates(df: DataFrame, k: Seq[String], name: String): (DataFrame, Column) =
-    (df.withColumn(name, count(lit(1)).over(Window.partitionBy(k.map(col): _*))),
-      count(when(allSet(k) && col(name) > 1, lit(1))))
+  /** The duplicate-key detector, shared by DML validation, the
+    * affect-twice check ([[affectTwice]]) and ALTER's constraint backfill:
+    * `df` gains column `name`, the number of `keep` rows sharing each
+    * row's key `k` (a window count), and the returned aggregate counts the
+    * `keep` rows whose key is fully set and occurs more than once. The
+    * window groups NULL keys together, so the [[allSet]] guard is what
+    * keeps a key with a NULL part from ever counting. */
+  private def keyDuplicates(df: DataFrame, k: Seq[String], name: String,
+      keep: Column = lit(true)): (DataFrame, Column) =
+    (df.withColumn(name, count(when(keep, lit(1))).over(Window.partitionBy(k.map(col): _*))),
+      count(when(keep && allSet(k) && col(name) > 1, lit(1))))
+
+  /** PG's "cannot affect a row a second time" rule as a [[keyDuplicates]]
+    * window over `k`, a key every row of `rows` carries: the target's
+    * pre-image row key (UPDATE … FROM, MERGE) or upsert's pre-SET conflict
+    * key. Every row a statement can hit has it set, and rows that cannot
+    * be hit hold distinct keys, so a repeat means one row was hit twice
+    * and no window group collects the untouched rows. When `single` the
+    * rows are coalesced first, so the window adds no shuffle. The
+    * aggregate and `msg` are validationParts' `twice` check, observed in
+    * the statement's one write. */
+  private def affectTwice(rows: DataFrame, k: Seq[String], single: Boolean,
+      msg: String): (DataFrame, Option[(Column, String)]) = {
+    val (counted, dup) = keyDuplicates(if (single) rows.coalesce(1) else rows, k, "__kt")
+    (counted, Some(dup -> msg))
+  }
 
   /** DML validation as ONE set of aggregates riding the statement's own
     * snapshot write (Dataset.observe, see [[observedWrite]]): row-local
@@ -2681,19 +2698,26 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * windows' clustering, so they add no shuffle.
     *
     * The checker replays the failure ORDER over the observed metrics:
-    * row-local first, then FK in declaration order, then in-frame
-    * duplicates, then existing-row conflicts (equality joins never match
-    * a NULL key part). `dupMsg`/`conflictMsg` keep the DML verbs'
-    * statement-specific messages. It reads every metric through a
-    * name→value getter and returns the row count under "__total" plus one
-    * entry per `tagCounts` condition, so the verbs' affected-row tallies
-    * ride the same aggregate. */
+    * the verb's `twice` check ([[affectTwice]]) first, then row-local,
+    * then FK in declaration order, then in-frame duplicates, then
+    * existing-row conflicts (equality joins never match a NULL key part).
+    * `dupMsg`/`conflictMsg` keep the DML verbs' statement-specific
+    * messages. It reads every metric through a name→value getter and
+    * returns the row count under "__total" plus one entry per `tagCounts`
+    * condition, so the verbs' affected-row tallies ride the same
+    * aggregate. With a `keepFilter` (MERGE: rows a DELETE arm hit stay in
+    * the frame for the `twice` check and the tallies, and the write drops
+    * them) the row-local, FK, unique-key and "__total" counts see only the
+    * kept rows. */
   private def validationParts(t: TableDef, rows: DataFrame, single: Boolean,
       dupMsg: Seq[String] => String,
       conflictsWith: Option[DataFrame],
       conflictMsg: Seq[String] => String,
-      tagCounts: Seq[(String, Column)])
+      tagCounts: Seq[(String, Column)],
+      twice: Option[(Column, String)] = None,
+      keepFilter: Option[Column] = None)
       : (DataFrame, Seq[Column], (String => Any) => Map[String, Long]) = {
+    val keep = keepFilter.getOrElse(lit(true))
     val rowChecks: Seq[(String, Column)] =
       t.columns.filter(c => c.notNull && !c.serial).map(c =>
         s"NOT NULL violation: ${t.name}.${c.name}" -> col(c.name).isNull) ++
@@ -2715,12 +2739,12 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // order); min() across rows picks a deterministic representative
     val violCol =
       if (rowChecks.isEmpty) lit(null).cast("string")
-      else coalesce(rowChecks.map { case (msg, cond) => when(cond, lit(msg)) } :+
-        lit(null).cast("string"): _*)
+      else when(keep, coalesce(rowChecks.map { case (msg, cond) => when(cond, lit(msg)) } :+
+        lit(null).cast("string"): _*))
     val keySets = uniqueKeySets(t)
     var joined = (if (single) rows.coalesce(1) else rows).withColumn("__cviol", violCol)
     val dups = keySets.zipWithIndex.map { case (k, j) =>
-      val (counted, dup) = keyDuplicates(joined, k, s"__kc$j")
+      val (counted, dup) = keyDuplicates(joined, k, s"__kc$j", keep)
       joined = counted
       dup.as(s"__dup$j")
     }
@@ -2744,22 +2768,26 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       }
     }
     val aggs: Seq[Column] =
+      twice.map(_._1.as("__twice")).toSeq ++
       Seq(min(col("__cviol")).as("__viol")) ++
       fks.zipWithIndex.map { case (c, i) =>
-        sum(when(col(c.name).isNotNull && col(s"__fkp$i").isNull, 1L)
+        sum(when(keep && col(c.name).isNotNull && col(s"__fkp$i").isNull, 1L)
           .otherwise(0L)).as(s"__orph$i") } ++
       dups ++
       (if (conflictsWith.isDefined)
         keySets.zipWithIndex.map { case (_, j) =>
           sum(when(col(s"__ex${j}_0").isNotNull, 1L).otherwise(0L)).as(s"__conf$j") }
       else Nil) ++
-      Seq(count(lit(1)).as("__total")) ++
+      Seq(count(when(keep, lit(1))).as("__total")) ++
       tagCounts.map { case (name, cond) =>
         sum(when(cond, 1L).otherwise(0L)).as(s"__tag_$name") }
     val check: (String => Any) => Map[String, Long] = get => {
       // sum() over ZERO rows yields NULL: normalize it to 0
       def lng(n: String): Long =
         Option(get(n)).map(_.asInstanceOf[Number].longValue).getOrElse(0L)
+      twice.foreach { case (_, msg) =>
+        if (lng("__twice") > 0) throw new IllegalArgumentException(msg)
+      }
       Option(get("__viol").asInstanceOf[String])
         .foreach(m => throw new IllegalArgumentException(m))
       fks.zipWithIndex.foreach { case (c, i) =>
@@ -2797,18 +2825,21 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     appendFused(t, joined, aggs, single, check)("__total")
   }
 
-  /** Post-image validation for UPDATE/MERGE/upsert (row-local + FK +
-    * whole-table uniqueness of the rewritten snapshot) riding the publish
-    * write (see [[publishFused]]), no separate validation job, with
-    * `beforePublish` (RETURNING pins) run after every check passed. */
+  /** Post-image validation for UPDATE/MERGE/upsert (the verb's `twice`
+    * check + row-local + FK + whole-table uniqueness of the rewritten
+    * snapshot) riding the publish write (see [[publishFused]]), no
+    * separate validation job, with `beforePublish` (RETURNING pins) run
+    * after every check passed. Rows failing `keepFilter` are counted by
+    * `twice` and `tagCounts` but never validated or written. */
   private def validatePostImagePublish(t: TableDef, tagged: DataFrame,
       verb: String, single: Boolean, tagCounts: Seq[(String, Column)] = Nil,
+      twice: Option[(Column, String)] = None, keepFilter: Option[Column] = None,
       beforePublish: () => Unit = () => ()): Map[String, Long] = {
     val (joined, aggs, check) = validationParts(t, tagged, single,
       dupMsg = k => s"UNIQUE violation after $verb: ${k.mkString(",")}",
       conflictsWith = None, conflictMsg = _ => "",
-      tagCounts = tagCounts)
-    publishFused(t, joined, aggs, None, single, check, beforePublish)
+      tagCounts = tagCounts, twice = twice, keepFilter = keepFilter)
+    publishFused(t, joined, aggs, keepFilter, single, check, beforePublish)
   }
 
   /** Top-level (outside single-quoted literals AND double-quoted
@@ -3179,17 +3210,19 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * to SET and WHERE), matched-but-WHERE-false rows stay untouched, and
     * non-matching incoming rows insert. The merged state publishes as a
     * new snapshot version, exactly like UPDATE. The reference lists
-    * UPSERT as its top unimplemented statement (docs/SQL_GRAMMAR.md:715). */
+    * UPSERT as its top unimplemented statement (docs/SQL_GRAMMAR.md:715).
+    *
+    * PG's rule that one statement cannot affect a row twice rejects two
+    * incoming rows sharing a conflict key. Every post-image row carries
+    * its pre-SET conflict key, and [[affectTwice]] counts repeats of it:
+    * existing keys are unique and fresh keys are never existing keys, so a
+    * repeat is two incoming rows on one key, whether or not the key
+    * exists. The count is observed in the publish write, like every other
+    * check: the statement is one Spark action. */
   private def upsertDoUpdate(t: TableDef, aligned: DataFrame, target: Seq[String],
       setS: String, whereOpt: Option[String], returning: Option[String]): DataFrame = {
     val k = conflictKeySets(t, target).head
     val keySet = allSet(k)
-    // PG: one statement cannot update the same existing row twice
-    if (aligned.filter(keySet).groupBy(k.map(col): _*).count()
-        .filter(col("count") > 1).limit(1).count() > 0)
-      throw new IllegalArgumentException(
-        "ON CONFLICT DO UPDATE cannot affect a row a second time: " +
-          s"duplicate (${k.mkString(",")}) keys in the insert batch")
     val existing = tableDf(t)
     val inc = aligned.select(t.columns.map(c => col(c.name).as("__exc_" + c.name)): _*)
     val joinCond = k.map(c => col(c) === col("__exc_" + c)).reduce(_ && _)
@@ -3204,32 +3237,47 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     }.toMap
     val wherePred = whereOpt.map(w => expr(PgRewrite.rewrite(resolveExc(w)))).getOrElse(lit(true))
     val matched = existing.join(inc, joinCond, "inner")
+    // each row's pre-SET conflict key (on matched rows the existing key,
+    // which equals the incoming one)
+    val pre = k.map("__pre_" + _)
+    val preKey = k.zip(pre).map { case (c, p) => col(c).as(p) }
     val updated = matched.filter(wherePred).select(t.columns.map(c =>
-      sets.getOrElse(c.name, col(c.name)).as(c.name)): _*)
+      sets.getOrElse(c.name, col(c.name)).as(c.name)) ++ preKey: _*)
     val skipped = matched.filter(!wherePred || wherePred.isNull)
-      .select(t.columns.map(c => col(c.name)): _*)
+      .select(t.columns.map(c => col(c.name)) ++ preKey: _*)
     val untouched = existing.join(
       aligned.filter(keySet).select(k.map(col): _*), k, "left_anti")
+      .select(col("*") +: preKey: _*)
     val fresh = aligned.join(existing.filter(keySet).select(k.map(col): _*), k, "left_anti")
+      .select(col("*") +: preKey: _*)
     // tag row provenance so the updated/inserted tallies ride the
     // validation aggregate instead of two extra count() jobs; the tag
-    // never reaches the published snapshot
+    // never reaches the published snapshot. A row whose conflict key has
+    // a NULL part can never be hit twice: a per-row id keeps all such
+    // rows out of one shared window group.
     val tagged = untouched.withColumn("__src", lit("keep"))
       .unionByName(skipped.withColumn("__src", lit("keep")))
       .unionByName(updated.withColumn("__src", lit("up")))
       .unionByName(fresh.withColumn("__src", lit("ins")))
+      .withColumn("__pre_row",
+        when(allSet(pre), lit(0L)).otherwise(monotonically_increasing_id()))
     val upsertTags = Seq("up" -> (col("__src") === "up"),
       "ins" -> (col("__src") === "ins"))
-    // row-local + FK + post-merge whole-table uniqueness (the SET
-    // expressions or a different unique key could collide) + the up/ins
-    // tallies ALL ride the publish write's job (observe). RETURNING sees
-    // the post-image of every inserted or updated row, pinned before the
-    // publish supersedes the snapshot this plan reads. The post-image is
-    // a join of the two inputs, which the optimizer prices at their
-    // product, so the write layout is sized by the inputs themselves.
+    // The post-image is a join of the two inputs, which the optimizer
+    // prices at their product, so the write layout is sized by the inputs
+    // themselves.
+    val single = singleFile(existing, aligned)
+    val (counted, twice) = affectTwice(tagged, pre :+ "__pre_row", single,
+      "ON CONFLICT DO UPDATE cannot affect a row a second time: " +
+        s"duplicate (${k.mkString(",")}) keys in the insert batch")
+    // affect-twice + row-local + FK + post-merge whole-table uniqueness
+    // (the SET expressions or a different unique key could collide) + the
+    // up/ins tallies ALL ride the publish write's job (observe).
+    // RETURNING sees the post-image of every inserted or updated row,
+    // pinned before the publish supersedes the snapshot this plan reads.
     var ret: Option[DataFrame] = None
-    val counts = validatePostImagePublish(t, tagged, "upsert",
-      single = singleFile(existing, aligned), tagCounts = upsertTags,
+    val counts = validatePostImagePublish(t, counted, "upsert", single,
+      tagCounts = upsertTags, twice = twice,
       beforePublish = () =>
         ret = returning.map(r => returningDf(t, updated.unionByName(fresh), r)))
     ret.getOrElse(ok("INSERT", counts("up") + counts("ins")))
@@ -3331,7 +3379,10 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * in a SELECT. One divergence from PG, deliberate: a target row
     * matching MORE THAN ONE source row fails loudly instead of taking
     * an arbitrary source row — a deterministic engine must not publish
-    * whichever row a shuffle happened to order first. */
+    * whichever row a shuffle happened to order first. Such a row appears
+    * once per match in `target ⟕ changed`, so [[affectTwice]] over its
+    * pre-image row key catches it inside the publish write, which also
+    * observes the updated-row tally: the statement is one Spark action. */
   private def updateFrom(t: TableDef, alias: Option[String], setS: String,
       fromRest: String, returning: Option[String]): DataFrame = {
     val (fromS, whereOpt) = splitTopLevelWhere(fromRest)
@@ -3354,34 +3405,26 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     val keySel = key.map(k => s"$tAlias.$k AS __key_$k").mkString(", ")
     val setSel = assignExprs.map { case (cn, e) => s"($e) AS __new_$cn" }.mkString(", ")
     val whereSql = whereOpt.map(w => s" WHERE $w").getOrElse("")
-    // lazy checkpoint: the multi-match aggregate right below is the
-    // first action and materializes the blocks inside its own job
+    // lazy checkpoint: the publish write is the first action and
+    // materializes the blocks inside its own job
     val changed = spark.sql(PgRewrite.rewrite(
       s"SELECT $keySel, $setSel FROM $tv AS $tAlias, $fromS$whereSql"))
       .localCheckpoint(false)
-    val keyCols = key.map(k => col("__key_" + k))
-    // multi-match probe + changed tally in ONE aggregate job (was: a
-    // groupBy-limit-count probe plus a count); count > countDistinct
-    // matches groupBy(count > 1) exactly (struct() never NULL, NULL key
-    // fields null-safe in both)
-    val chAgg = changed.agg(count(lit(1)).as("c"),
-      countDistinct(struct(keyCols: _*)).as("d")).collect()(0)
-    if (chAgg.getAs[Long]("c") > chAgg.getAs[Long]("d"))
-      throw new IllegalArgumentException(
-        "UPDATE … FROM: a target row matches more than one source row")
-    val nChanged = chAgg.getAs[Long]("c")
     val cur = tableDf(t)
     val joinCond = key.map(k => col(k) === col("__key_" + k)).reduce(_ && _)
     val matched = col("__key_" + key.head).isNotNull
     val assign = assignExprs.toMap
-    val next = cur.join(changed, joinCond, "left")
+    val single = singleFile(cur)
+    val (next, twice) = affectTwice(cur.join(changed, joinCond, "left")
       .select(t.columns.map { c =>
         val base = col(c.name)
         (if (assign.contains(c.name))
           when(matched, col("__new_" + c.name).cast(TypeMap.toSpark(c.sqlType)))
             .otherwise(base)
         else base).as(c.name)
-      }: _*)
+      } ++ key.map(k => col(k).as("__pre_" + k)) :+ matched.as("__upd"): _*),
+      key.map("__pre_" + _), single,
+      "UPDATE … FROM: a target row matches more than one source row")
     def retDf(r: String): DataFrame = {
       val post = cur.join(changed, joinCond, "inner")
         .select(t.columns.map { c =>
@@ -3391,12 +3434,14 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         }: _*)
       returningDf(t, post, r)
     }
-    // post-image validation rides the publish write's job
+    // affect-twice, post-image validation and the updated-row tally ride
+    // the publish write's job
     var ret: Option[DataFrame] = None
-    validatePostImagePublish(t, next, "UPDATE", singleFile(cur),
+    val counts = validatePostImagePublish(t, next, "UPDATE", single,
+      tagCounts = Seq("upd" -> col("__upd")), twice = twice,
       beforePublish = () => ret = returning.map(retDf))
     spark.catalog.dropTempView(tv)
-    ret.getOrElse(ok("UPDATE", nChanged))
+    ret.getOrElse(ok("UPDATE", counts("upd")))
   }
 
   private def delete(stmt: String): DataFrame = {
@@ -3492,11 +3537,16 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * an anti-join (NOT EXISTS) over the same ON condition. New column
     * values ride the same join projection (`__new_c` per column), so a
     * DELETE clause's branch carries the OLD row image for RETURNING free
-    * of a second scan. PG's "cannot affect row a second time" rule is a
-    * distributed groupBy-count on the target row key over the acted-on
-    * pairs. Updates/deletes/inserts union into ONE new copy-on-write
-    * snapshot: the statement is atomic at the version pointer, like
-    * UPDATE/DELETE/upsert. */
+    * of a second scan. Updates/deletes/inserts union into ONE new
+    * copy-on-write snapshot: the statement is atomic at the version
+    * pointer, like UPDATE/DELETE/upsert. PG's "cannot affect row a second
+    * time" rule is [[affectTwice]] over the pre-image row key of
+    * `target ⟕ acted-on pairs`, windowed before the inserted rows join.
+    * Rows a DELETE arm hit stay in that frame, so two DELETE hits on one
+    * row are caught too; the publish's keepFilter drops them from the
+    * write and from every other check. The check and the update, delete
+    * and insert tallies are all observed in the publish write: the
+    * statement is one Spark action. */
   private def merge(stmt: String): DataFrame = {
     val (noRet, returning) = splitReturning(stmt.trim.stripSuffix(";"))
     val head =
@@ -3634,29 +3684,11 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       changedParts += spark.sql(PgRewrite.rewrite(
         s"SELECT $keySel, ${actionCase(bySrcWs)}, ${newCols(bySrcWs)} " +
           s"FROM $tv AS $tAlias WHERE NOT EXISTS (SELECT 1 FROM $srcText WHERE $cond)"))
-    // LAZY checkpoint: the affect-twice aggregate right below is the
-    // first action and materializes the blocks inside its own job — an
-    // eager cut here would pay a separate materialization job first
+    // LAZY checkpoint: the publish write is the first action and
+    // materializes the blocks inside its own job — an eager cut here
+    // would pay a separate materialization job first
     val changed = changedParts.result().reduceOption(_ unionByName _)
       .map(_.filter(col("__action") =!= "keep").localCheckpoint(false))
-    // affect-twice probe + the update/delete tallies in ONE aggregate
-    // job (was: a groupBy-limit-count probe plus two filtered counts).
-    // count > countDistinct(struct(keys)) matches groupBy(count > 1)
-    // exactly: struct() is never NULL, and NULL key fields compare
-    // null-safe under both distinct and groupBy semantics.
-    var nUpd = 0L; var nDel = 0L
-    changed.foreach { ch =>
-      val r = ch.agg(count(lit(1)).as("c"),
-        countDistinct(struct(key.map(k => col("__key_" + k)): _*)).as("d"),
-        sum(when(col("__action") === "update", 1L).otherwise(0L)).as("u"),
-        sum(when(col("__action") === "delete", 1L).otherwise(0L)).as("dd"))
-        .collect()(0)
-      if (r.getAs[Long]("c") > r.getAs[Long]("d"))
-        throw new IllegalArgumentException(
-          "MERGE command cannot affect row a second time: a target row " +
-            "matches more than one source row")
-      nUpd = r.getAs[Long]("u"); nDel = r.getAs[Long]("dd")
-    }
 
     val inserted: Option[DataFrame] = if (insWs.isEmpty) None else {
       val maps = insWs.map {
@@ -3713,17 +3745,24 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     }
 
     val cur = tableDf(t)
-    val afterMatched = changed match {
+    // the write layout is sized by the statement's inputs, since the
+    // optimizer prices the matched-arm join at its product
+    val single = singleFile(cur +: inserted.toSeq: _*)
+    // `__act`: the target row's arm (NULL when no arm hit it), or
+    // "insert"; deleted rows keep their pre-image until the keepFilter
+    val (afterMatched, twice) = changed match {
       case Some(ch) =>
         val joinCond = key.map(k => col(k) === col("__key_" + k)).reduce(_ && _)
-        cur.join(ch, joinCond, "left")
-          .filter(col("__action").isNull || col("__action") =!= "delete")
+        affectTwice(cur.join(ch, joinCond, "left")
           .select(t.columns.map { c =>
             when(col("__action") === "update",
               col("__new_" + c.name).cast(TypeMap.toSpark(c.sqlType)))
               .otherwise(col(c.name)).as(c.name)
-          }: _*)
-      case None => cur
+          } ++ key.map(k => col(k).as("__pre_" + k)) :+ col("__action").as("__act"): _*),
+          key.map("__pre_" + _), single,
+          "MERGE command cannot affect row a second time: a target row " +
+            "matches more than one source row")
+      case None => (cur.withColumn("__act", lit(null).cast("string")), None)
     }
     def mergeRet(r: String): DataFrame = {
       val acted = Seq(
@@ -3732,22 +3771,18 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         inserted).flatten
       returningDf(t, acted.reduceOption(_ unionByName _).getOrElse(cur.limit(0)), r)
     }
-    // the inserted tally AND the post-merge validation (SET expressions
-    // or inserts could collide on any unique key) ride the publish
-    // write's job; the write layout is sized by the statement's inputs,
-    // since the optimizer prices the matched-arm join at its product
-    val taggedNext = inserted match {
-      case Some(i) => afterMatched.withColumn("__src", lit("keep"))
-        .unionByName(i.withColumn("__src", lit("ins")))
-      case None => afterMatched.withColumn("__src", lit("keep"))
-    }
+    // the affect-twice check, the update/delete/insert tallies AND the
+    // post-merge validation (SET expressions or inserts could collide on
+    // any unique key) ride the publish write's job
+    val next = inserted.foldLeft(afterMatched)((f, i) =>
+      f.unionByName(i.withColumn("__act", lit("insert")), allowMissingColumns = true))
     var ret: Option[DataFrame] = None
-    val counts = validatePostImagePublish(t, taggedNext, "MERGE",
-      singleFile(cur +: inserted.toSeq: _*),
-      tagCounts = Seq("ins" -> (col("__src") === "ins")),
+    val counts = validatePostImagePublish(t, next, "MERGE", single,
+      tagCounts = Seq("update", "delete", "insert").map(a => a -> (col("__act") === a)),
+      twice = twice, keepFilter = Some(col("__act").isNull || col("__act") =!= "delete"),
       beforePublish = () => ret = returning.map(mergeRet))
     completed = true
-    ret.getOrElse(ok("MERGE", nUpd + nDel + counts("ins")))
+    ret.getOrElse(ok("MERGE", counts("update") + counts("delete") + counts("insert")))
     } finally {
       spark.catalog.dropTempView(tv)
       if (insCache != null) insCache.unpersist()
@@ -3808,7 +3843,11 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
   // the observed metrics. Observe rejects DISTINCT aggregates, and the
   // driver must never merge a statement's key sets, so in-batch duplicates
   // are a distributed window count per unique key set (keyDuplicates) and
-  // every observed metric is O(1) on the driver. One path therefore serves
+  // every observed metric is O(1) on the driver. The "cannot affect a row
+  // a second time" rule of upsert, UPDATE … FROM and MERGE is the same
+  // window count over a key every post-image row carries (affectTwice),
+  // so each of those verbs, too, reaches the version pointer through its
+  // write alone. One path therefore serves
   // statements of every size; the write is laid out by singleFile like any
   // snapshot write. Because the check runs AFTER the bytes land, the write
   // targets are arranged so a validation failure never mutates visible

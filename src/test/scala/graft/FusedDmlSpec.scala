@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sqlfront.GraftSession
 
 /** Observe-fused DML outcome pins.
@@ -66,7 +68,16 @@ class FusedDmlSpec extends SparkSpec {
       "DELETE FROM t WHERE id = 1" -> "ok",
       "UPDATE t SET u = 'x' WHERE id = 3" -> "ok", // post-image UNIQUE? (x free after delete)
       "UPDATE t SET u = 'y'" -> // post-image UNIQUE violation across rows
-        "rej: UNIQUE violation after UPDATE: u"
+        "rej: UNIQUE violation after UPDATE: u",
+      // a double match whose SET rewrites the PK reports the match, not
+      // the post-image UNIQUE violation it would also cause
+      "UPDATE t SET id = p.id FROM p WHERE t.id >= 2" ->
+        "rej: UPDATE … FROM: a target row matches more than one source row",
+      // a table with no PK is keyed by its hidden rowid
+      "CREATE TABLE nk (a INT, b TEXT)" -> "ok",
+      "INSERT INTO nk VALUES (1, 'x'), (2, 'y')" -> "ok",
+      "UPDATE nk SET b = 'z' FROM p WHERE nk.a = 1" ->
+        "rej: UPDATE … FROM: a target row matches more than one source row"
     ), "SELECT id, pid, v, u FROM t ORDER BY id",
       Seq(Seq(2, 20, "b!", "y"), Seq(3, 10, "c!", "x")))
   }
@@ -85,6 +96,17 @@ class FusedDmlSpec extends SparkSpec {
         "ON CONFLICT (sku) DO UPDATE SET qty = EXCLUDED.qty") ->
         ("rej: ON CONFLICT DO UPDATE cannot affect a row a second time: " +
           "duplicate (sku) keys in the insert batch"),
+      // the duplicated key need not exist in the table
+      ("INSERT INTO inv VALUES ('q', 1, 1.0), ('q', 2, 2.0) " +
+        "ON CONFLICT (sku) DO UPDATE SET qty = EXCLUDED.qty") ->
+        ("rej: ON CONFLICT DO UPDATE cannot affect a row a second time: " +
+          "duplicate (sku) keys in the insert batch"),
+      // two hits on one target row that both reach a DELETE arm
+      "CREATE TABLE feed2 (sku TEXT, amt INT)" -> "ok",
+      "INSERT INTO feed2 VALUES ('a', 1), ('a', 2)" -> "ok",
+      "MERGE INTO inv i USING feed2 f ON i.sku = f.sku WHEN MATCHED THEN DELETE" ->
+        ("rej: MERGE command cannot affect row a second time: a target row " +
+          "matches more than one source row"),
       "CREATE TABLE feed (sku TEXT PRIMARY KEY, amt INT)" -> "ok",
       "INSERT INTO feed VALUES ('a', 10), ('b', -100), ('z', 30)" -> "ok",
       ("MERGE INTO inv i USING feed f ON i.sku = f.sku " +
@@ -145,5 +167,55 @@ class FusedDmlSpec extends SparkSpec {
     ).map(stmt =>
       s.sql(stmt).collect().map(_.toSeq).toSeq.sortBy(_.head.toString))
     assert(ret == Seq(Seq(Seq(1, 1), Seq(2, 2)), Seq(Seq(2, 20)), Seq(Seq(1, 1))))
+  }
+
+  test("upsert, UPDATE … FROM and MERGE run no count or collect action") {
+    val s = fresh()
+    Seq("CREATE TABLE t (id INT PRIMARY KEY, v INT)",
+      "INSERT INTO t VALUES (1, 1), (2, 2), (3, 3)",
+      "CREATE TABLE src (id INT PRIMARY KEY, v INT)",
+      "INSERT INTO src VALUES (1, 10), (4, 40)",
+      "CREATE TABLE dup (id INT, v INT)",
+      "INSERT INTO dup VALUES (2, 20), (2, 21)").foreach(s.sql)
+    s.sql("SELECT count(*) FROM t").collect() // registers the session's views
+    val twiceUpsert = "ON CONFLICT DO UPDATE cannot affect a row a second time: " +
+      "duplicate (id) keys in the insert batch"
+    val twiceFrom = "UPDATE … FROM: a target row matches more than one source row"
+    val twiceMerge = "MERGE command cannot affect row a second time: a target row " +
+      "matches more than one source row"
+    val script = Seq(
+      "INSERT INTO t VALUES (1, 5), (9, 9) ON CONFLICT (id) DO UPDATE SET v = EXCLUDED.v" -> None,
+      "INSERT INTO t VALUES (7, 1), (7, 2) ON CONFLICT (id) DO UPDATE SET v = EXCLUDED.v" ->
+        Some(twiceUpsert),
+      "UPDATE t SET v = src.v FROM src WHERE t.id = src.id" -> None,
+      "UPDATE t SET v = dup.v FROM dup WHERE t.id = dup.id" -> Some(twiceFrom),
+      ("MERGE INTO t USING src ON t.id = src.id WHEN MATCHED THEN UPDATE SET v = src.v " +
+        "WHEN NOT MATCHED THEN INSERT VALUES (src.id, src.v)") -> None,
+      "MERGE INTO t USING dup ON t.id = dup.id WHEN MATCHED THEN DELETE" -> Some(twiceMerge))
+    val events = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        events.synchronized { events += fn }
+      override def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit =
+        events.synchronized { events += fn }
+    }
+    def drain(): Unit = org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try script.foreach { case (stmt, rejected) =>
+      drain()
+      events.synchronized(events.clear())
+      rejected match {
+        case None => s.sql(stmt)
+        case Some(msg) =>
+          assert(intercept[IllegalArgumentException](s.sql(stmt)).getMessage == msg)
+      }
+      drain()
+      val fns = events.synchronized(events.toList)
+      assert(fns.nonEmpty, s"no query execution recorded for: $stmt")
+      assert(!fns.exists(f => f == "count" || f == "collect"),
+        s"$stmt ran actions besides its write: $fns")
+    } finally spark.listenerManager.unregister(listener)
+    assert(s.sql("SELECT id, v FROM t ORDER BY id").collect().map(_.toSeq).toSeq ==
+      Seq(Seq(1, 10), Seq(2, 2), Seq(3, 3), Seq(4, 40), Seq(9, 9)))
   }
 }

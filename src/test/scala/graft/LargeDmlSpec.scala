@@ -61,6 +61,12 @@ class LargeDmlSpec extends SparkSpec {
       assert(reject("UPDATE big SET id = 7 WHERE id = 8") == "UNIQUE violation after UPDATE: id")
       assert(table.version == v0)
       assert(!Files.exists(s.catalog.tableDir(table.copy(version = v0 + 1))))
+      // a 200k-row MERGE whose source repeats one key: rejected, pointer unmoved
+      assert(reject("MERGE INTO big t USING (SELECT src_id AS m_id FROM big_src " +
+        "UNION ALL SELECT 7 AS m_id) m ON t.id = m.m_id WHEN MATCHED THEN UPDATE SET v = 0") ==
+        "MERGE command cannot affect row a second time: a target row matches more than one source row")
+      assert(table.version == v0)
+      assert(!Files.exists(s.catalog.tableDir(table.copy(version = v0 + 1))))
 
       // (b) valid large UPDATE and MERGE publish in parallel with exact counts
       assert(status("UPDATE big SET v = v + 1 WHERE id % 2 = 0") == ("UPDATE", rows / 2))

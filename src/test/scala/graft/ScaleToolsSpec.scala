@@ -184,18 +184,6 @@ class ScaleToolsSpec extends SparkSpec {
       assert(got == want,
         s"thr=$thr: missing=${(want -- got).take(5)} extra=${(got -- want).take(5)}")
     }
-    // r18: the hashed prefix index (xxhash64 longs in the df/rank
-    // windows and the candidate self-join) must produce EXACTLY the
-    // string-keyed formulation's verified pairs — hashing can only add
-    // candidates, and verification filters on exact shingle arrays
-    for (thr <- Seq(0.5, 0.8, 1.0)) {
-      val (ph, ih) = DedupQueries.jaccardPairsBuild(ss, thr, hashedPrefix = true)
-      val (pt, it) = DedupQueries.jaccardPairsBuild(ss, thr, hashedPrefix = false)
-      val gh = ph.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val gt = pt.select("a", "b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      ih.unpersist(); it.unpersist()
-      assert(gh == gt, s"thr=$thr: hashed and string prefix builds diverge")
-    }
     ss.unpersist()
     // out-of-range thresholds are rejected loudly
     assertThrows[IllegalArgumentException](DedupQueries.jaccardPairsBuild(ss, 0.0))

@@ -4,7 +4,8 @@
 Usage: bench_medians.py <round> [--cpus N] [--baseline <round>]
 Prints per-query medians for the round (filtered to runs tagged with the
 given cpus; untagged legacy runs are listed but excluded), and a
-comparison table against another round's summary when --baseline is given.
+comparison table against another round's summary for the same core count
+when --baseline is given.
 """
 import json, glob, statistics, sys, argparse
 
@@ -30,7 +31,10 @@ med = {k: statistics.median([r[k] for r in runs if k in r]) for k in keys}
 print(f"sum of per-query medians: {sum(med.values()):.1f} s over {len(keys)} keys")
 
 if a.baseline:
-    base = json.load(open(f"bench_archive/bench_round_r{a.baseline:02d}_summary.json"))["queries"]
+    # same name graft.Bench writes: non-32-core rounds carry a cpus suffix
+    suffix = "" if a.cpus == "32" else f"_cpus{a.cpus}"
+    base = json.load(open(
+        f"bench_archive/bench_round_r{a.baseline:02d}_summary{suffix}.json"))["queries"]
     rows = [(med[k] / base[k]["median"], base[k]["median"], med[k], k)
             for k in keys if k in base and base[k]["median"] > 0.05]
     rows.sort()
