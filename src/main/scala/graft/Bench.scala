@@ -159,16 +159,14 @@ object Bench {
     // APPEND-ONLY per-run archive under version control: round 16 proved
     // single-run per-query numbers swing >2× between same-HEAD runs, and
     // its triage only worked because an overwrite accidentally preserved
-    // a second run. Every full invocation now writes its OWN
+    // a second run. Every full invocation writes its OWN
     // bench_full_r<NN>_<runid>.json (runid = UTC-millis base36 + pid —
-    // unique per run, never overwritten), then derives a cross-run
-    // min/median summary over ALL of the round's archived runs so the
-    // judge can read a stable per-query number without forensics. The
-    // round number is inferred from the driver's own BENCH_r<N>.json
-    // trail in the repo root — the bench running in round N+1 sees
-    // records up to N. FILTERED runs (query-name args — the local dev
-    // loop) never archive: a 1-query map has no place in the round's
-    // evidence trail.
+    // unique per run, never overwritten); `tools/bench_medians.py` derives
+    // the round's cross-run medians from these archives. The round number
+    // is inferred from the BENCH_r<N>.json records in the repo root — the
+    // bench running in round N+1 sees records up to N. FILTERED runs
+    // (query-name args — the local dev loop) never archive: a 1-query map
+    // has no place in the round's evidence trail.
     if (args.isEmpty) try {
       val prior = Option(new java.io.File(".").listFiles).getOrElse(Array.empty)
         .flatMap(f => "^BENCH_r(\\d+)\\.json$".r
@@ -181,58 +179,6 @@ object Bench {
       java.nio.file.Files.write(
         dir.resolve(f"bench_full_r$round%02d_$runId.json"),
         (fullLine + "\n").getBytes("UTF-8"))
-      // cross-run aggregate: per-query min + median over every archived
-      // run of THIS round (including the one just written). Derived
-      // artifact — regenerating it per run is not an overwrite of
-      // evidence; the raw runs above are the evidence.
-      val runRe = f"^bench_full_r$round%02d_.*\\.json$$".r
-      // aggregate ONLY runs at THIS run's scale factor: the round can
-      // legitimately hold full runs at several fixtures (sf0.1 driver
-      // runs + an sf1 decade run), and blending them would make the
-      // summary's per-query "min" always the smallest fixture's number
-      // while the file labels itself with one sf
-      val sfTag = s""""sf":${jstr(sfDir)}"""
-      // ... and at THIS run's core count: the driver's scaling pass runs
-      // the same round at 8 cores, and blending those archives into the
-      // 32-core medians shifted every per-query number. Legacy archives
-      // (no "cpus" key — written before r18) are excluded the same way:
-      // their core count is unknowable, which is exactly the defect.
-      val cpuTag = s""""cpus":${jstr(cpus)}"""
-      val runFiles = Option(dir.toFile.listFiles).getOrElse(Array.empty)
-        .filter(f => runRe.findFirstIn(f.getName).isDefined).sortBy(_.getName)
-        .filter { f =>
-          val txt = new String(
-            java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-          txt.contains(sfTag) && txt.contains(cpuTag)
-        }
-      val qRe = """"([^"]+)":(-?[0-9][0-9.eE+-]*)""".r
-      val perRun: Seq[Map[String, Double]] = runFiles.toSeq.map { f =>
-        val txt = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-        val start = txt.indexOf("\"queries\":{")
-        if (start < 0) Map.empty[String, Double]
-        else {
-          val body = txt.substring(start + 11, txt.indexOf("}", start))
-          qRe.findAllMatchIn(body).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      }
-      val allKeys = perRun.flatMap(_.keys).distinct.sorted
-      def med(xs: Seq[Double]): Double = {
-        val s = xs.sorted
-        if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
-      }
-      val summary = allKeys.map { k =>
-        val xs = perRun.flatMap(_.get(k))
-        jstr(k) + s""":{"min":${xs.min},"median":${med(xs)},"n":${xs.size}}"""
-      }.mkString("{", ",", "}")
-      // non-default core counts get their own summary file — otherwise the
-      // driver's trailing 8-core scaling run would overwrite the 32-core
-      // round summary as the last writer
-      val sumName = if (cpus == "32") f"bench_round_r$round%02d_summary.json"
-        else f"bench_round_r$round%02d_summary_cpus$cpus.json"
-      java.nio.file.Files.write(
-        dir.resolve(sumName),
-        (s"""{"round":$round,"runs":${runFiles.length},"sf":${jstr(sfDir)},""" +
-          s""""cpus":${jstr(cpus)},"queries":$summary}""" + "\n").getBytes("UTF-8"))
     } catch { case _: Throwable => () }
     graft.operators.DedupQueries.evictSharedPairs(spark)
     graft.operators.GraphQueries.evictSharedEdges(spark)

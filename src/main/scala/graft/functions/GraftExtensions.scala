@@ -7,7 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** SparkSessionExtensions hook (SURVEY §2.12 ladder step (c)): registers
   * the engine's native expressions as SQL functions so `spark.sql` users
   * get them without the Column API — `dot_exact(a, b)`,
-  * `dot_exact_fd(a, b)`, `graft_minhash(shingles, k)`.
+  * `dot_exact_fd(a, b)`, `graft_minhash(shingles, k)` — and the
+  * engine's optimizer rules ([[IntersectCountRule]], [[PointLookupRule]]).
   * Installed by [[graft.Engine]] via `builder.withExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -17,6 +18,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => IntersectCountRule)
+    e.injectOptimizerRule(PointLookupRule)
     e.injectFunction((FunctionIdentifier("dot_exact"),
       info("dot_exact", "dot_exact(array<float>, array<float>) - exact decimal-quantized dot product"),
       (args: Seq[Expression]) => DotExactExpr(args(0), args(1))))

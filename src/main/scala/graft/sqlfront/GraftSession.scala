@@ -10,6 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.catalog._
+import graft.functions.PointLookup
 
 /** The engine's SQL entry point: statement routing + DDL/DML interpreters
   * over a [[Catalog]]-managed parquet warehouse, with the entire SELECT
@@ -306,6 +307,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     spark.sql(s"DROP DATABASE IF EXISTS $name CASCADE")
     // recursive delete of the database's whole storage namespace
     val rootDir = dbRoot(name)
+    PointLookup.release(rootDir)
     val walk = Files.walk(rootDir)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))
@@ -383,7 +385,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * added by ALTER after the snapshot was written are null-filled;
     * dropped columns are projected away (metadata-only ALTER, reference
     * kv/KvQueryExecutor.java:2981-3098). Includes the hidden rowid. */
-  def tableDf(t: TableDef): DataFrame = {
+  def tableDf(t: TableDef): DataFrame = snapshotDf(t, Map.empty)
+
+  private def snapshotDf(t: TableDef, options: Map[String, String]): DataFrame = {
     val dir = catalog.tableDir(t)
     val schema = StructType(t.columns.map(c =>
       StructField(c.name, TypeMap.toSpark(c.sqlType), nullable = true)))
@@ -393,13 +397,22 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // deterministically without a mergeSchema footer sweep.
     if (!dirNonEmpty(dir))
       spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    else spark.read.schema(schema).parquet(dir.toString)
+    else spark.read.schema(schema).options(options).parquet(dir.toString)
   }
 
   /** Visible (rowid-free) projection, as SELECT * must show it
-    * (reference kv/KvQueryExecutor.java:2727-2744). */
-  def visibleDf(t: TableDef): DataFrame =
-    tableDf(t).select(t.visibleColumns.map(c => col(c.name)): _*)
+    * (reference kv/KvQueryExecutor.java:2727-2744). Backs the public
+    * table views, so its read is tagged with a single-column primary
+    * key and `WHERE pk = <literal>` in a statement's query is served by
+    * [[graft.functions.PointLookupRule]]'s index. A DML statement reads
+    * its own target through the untagged [[tableDf]]. */
+  def visibleDf(t: TableDef): DataFrame = {
+    val pkTag = t.primaryKey match {
+      case Seq(k) => t.column(k).map(c => PointLookup.PkOption -> c.name).toMap
+      case _ => Map.empty[String, String]
+    }
+    snapshotDf(t, pkTag).select(t.visibleColumns.map(c => col(c.name)): _*)
+  }
 
   /** Bumped on every data write that is INVISIBLE to the catalog
     * generation — INSERT/COPY append part-files without a catalog save.
@@ -1785,6 +1798,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         names.split(",").map(_.trim.replaceAll("\"", "").toLowerCase).foreach { n =>
           if (catalog.getTable(n).isEmpty && ifEx == null)
             throw new IllegalArgumentException(s"no such table: $n")
+          catalog.getTable(n).foreach(t => PointLookup.release(catalog.tableDir(t).getParent))
           catalog.dropTable(n)
           spark.catalog.dropTempView(n)
         }
@@ -1799,8 +1813,12 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       .map(_.trim.replaceAll("\"", "").toLowerCase).filter(_.nonEmpty)
     names.foreach { n =>
       val t = catalog.getTable(n).getOrElse(throw new IllegalArgumentException(s"no such table: $n"))
-      // lazy truncate (reference: truncate-ts bump): new empty version dir
+      // lazy truncate (reference: truncate-ts bump): new empty version dir.
+      // A rolled-back transaction's publish can have left that dir behind
+      // with its rows; the write verbs overwrite it, TRUNCATE empties it
       val nt = t.copy(version = t.version + 1)
+      PointLookup.release(catalog.tableDir(t).getParent)
+      deleteRecursively(catalog.tableDir(nt))
       Files.createDirectories(catalog.tableDir(nt))
       catalog.putTable(nt)
     }
@@ -1826,6 +1844,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     require(catalog.getTable(newName).isEmpty && !catalog.views.contains(newName),
       s"relation exists: $newName")
     val oldDir = catalog.root.resolve(t.name)
+    PointLookup.release(oldDir)
     if (Files.exists(oldDir)) Files.move(oldDir, catalog.root.resolve(newName))
     t.columns.filter(_.serial).foreach { c =>
       val oldSeq = s"${t.name}_${c.name}_seq"
@@ -2248,14 +2267,16 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * `df.count()`, and Catalyst may prune columns the bare query would
     * materialize (a count over a projection can skip column reads), so
     * the reported time can slightly UNDERSTATE the real scan cost. Plan
-    * text is unaffected. */
+    * text is unaffected. A primary-key lookup shows the index's local
+    * scan only when its index is already built, else the parquet scan. */
   private def explain(stmt: String): DataFrame = {
     import spark.implicits._
     val inner = stmt.trim.replaceFirst("(?is)^EXPLAIN\\s+(ANALYZE\\s+)?", "")
     val df = planQuery(inner) // EXPLAIN is read-classified — atomic with registration
     val analyze = stmt.trim.toUpperCase.startsWith("EXPLAIN ANALYZE")
-    val plan = df.queryExecution.explainString(
-      org.apache.spark.sql.execution.FormattedMode)
+    def shown = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+    // a cold point-lookup index is not built just to print the plan
+    val plan = if (analyze) shown else PointLookup.planning(shown)
     val text =
       if (!analyze) plan
       else {

@@ -4,7 +4,10 @@ import java.io.{BufferedInputStream, BufferedOutputStream, ByteArrayOutputStream
 import java.net.{InetSocketAddress, ServerSocket, Socket}
 import java.nio.charset.StandardCharsets.UTF_8
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LocalTableScanExec
 import org.apache.spark.sql.types._
 
 /** PostgreSQL wire-protocol (v3) front end over [[GraftSession]] — the
@@ -391,12 +394,23 @@ final class PgWire(gs: GraftSession, port: Int = 0,
       }
     }
 
-  /** Streams DataRow messages; returns the row count. Collects through
-    * toLocalIterator so a large result never materializes as one driver
-    * array (the row batch in flight is partition-bounded). */
+  /** A result's rows. A result already on the driver — its executed plan
+    * is a LocalTableScanExec, as for a primary-key point lookup served by
+    * [[graft.functions.PointLookupRule]] or a pg_catalog view — is returned
+    * from the plan's executeCollect without a Spark job. Any other result
+    * streams through toLocalIterator, so a large result never
+    * materializes as one driver array (the row batch in flight is
+    * partition-bounded). */
+  private def resultRows(df: DataFrame): java.util.Iterator[org.apache.spark.sql.Row] =
+    df.queryExecution.executedPlan match {
+      case _: LocalTableScanExec => df.collect().iterator.asJava
+      case _ => df.toLocalIterator()
+    }
+
+  /** Streams DataRow messages from [[resultRows]]; returns the row count. */
   private def dataRows(out: Out, df: DataFrame): Long = {
     var n = 0L
-    val it = df.toLocalIterator()
+    val it = resultRows(df)
     while (it.hasNext) { writeDataRow(out, it.next()); n += 1 }
     n
   }
@@ -885,7 +899,7 @@ final class PgWire(gs: GraftSession, port: Int = 0,
                       if (maxRows > 0) pin = Some(gs.pinCurrentVersions())
                       gs.sql(sqlText)
                     }
-                    new PortalExec(df, df.toLocalIterator(),
+                    new PortalExec(df, resultRows(df),
                       df.schema.fields.map(_.dataType), resolvedFmts(df, resCodes), pin)
                   } catch { case e: Throwable =>
                     pin.foreach(gs.releaseVersionPin)

@@ -145,6 +145,17 @@ class DdlDmlSpec extends SparkSpec {
     assertThrows[IllegalArgumentException](s.sql("INSERT INTO t VALUES (3)"))
   }
 
+  test("TRUNCATE after a rolled-back UPDATE does not bring back the rolled-back rows") {
+    val s = fresh()
+    s.sql("CREATE TABLE t (id INT PRIMARY KEY, v TEXT)")
+    s.sql("INSERT INTO t VALUES (1, 'a')")
+    // the UPDATE publishes the next snapshot version; ROLLBACK moves the
+    // pointer back, and TRUNCATE then takes that same version number
+    s.sql("BEGIN; UPDATE t SET v = 'rolled back' WHERE id = 1; ROLLBACK")
+    s.sql("TRUNCATE TABLE t")
+    assert(s.sql("SELECT * FROM t").count() == 0)
+  }
+
   test("views and materialized views with explicit refresh") {
     val s = fresh()
     s.sql("CREATE TABLE t (id INT PRIMARY KEY, v DOUBLE)")

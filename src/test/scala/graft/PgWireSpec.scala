@@ -1115,4 +1115,98 @@ class PgWireSpec extends SparkSpec {
       ca.terminate(); cb.terminate()
     } finally srv.stop()
   }
+
+  test("a warm point lookup by simple query, EXECUTE and Bind returns the same rows and runs no Spark job") {
+    val (srv, c) = freshServer()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+    try {
+      c.startup()
+      c.query("CREATE TABLE pk (id BIGINT PRIMARY KEY, v TEXT)")
+      c.query("INSERT INTO pk VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      c.query("PREPARE by_id(BIGINT) AS SELECT id, v FROM pk WHERE id = $1")
+      def rows(msgs: Seq[(Char, Array[Byte])]): Seq[Seq[String]] = {
+        assert(!msgs.exists(_._1 == 'E'), c.cstrBody('E', msgs))
+        msgs.filter(_._1 == 'D').map(m => c.row(m._2))
+      }
+      def simple(k: Int) = rows(c.query(s"SELECT id, v FROM pk WHERE id = $k"))
+      def execute(k: Int) = rows(c.query(s"EXECUTE by_id($k)"))
+      def bind(k: Int) = {
+        val body = new ByteArrayOutputStream()
+        val d = new DataOutputStream(body)
+        def c0(s: String): Unit = { d.write(s.getBytes("UTF-8")); d.writeByte(0) }
+        c0(""); c0("SELECT id, v FROM pk WHERE id = $1"); d.writeShort(1); d.writeInt(20)
+        c.send('P', body.toByteArray)
+        body.reset(); c0(""); c0(""); d.writeShort(0); d.writeShort(1)
+        val kb = k.toString.getBytes("UTF-8")
+        d.writeInt(kb.length); d.write(kb); d.writeShort(0)
+        c.send('B', body.toByteArray)
+        body.reset(); c0(""); d.writeInt(0)
+        c.send('E', body.toByteArray)
+        c.send('S', Array.empty)
+        rows(c.readUntilReady())
+      }
+      // after the INSERT the first lookup scans and the second builds the index
+      assert(simple(2) == Seq(Seq("2", "b")))
+      assert(simple(2) == Seq(Seq("2", "b")))
+      spark.sparkContext.addSparkListener(listener)
+      drain()
+      jobs.set(0)
+      for ((k, want) <- Seq(3 -> Seq(Seq("3", "c")), 1 -> Seq(Seq("1", "a")), 9 -> Nil)) {
+        assert(simple(k) == want, s"simple query, key $k")
+        assert(execute(k) == want, s"EXECUTE, key $k")
+        assert(bind(k) == want, s"Bind, key $k")
+      }
+      drain()
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs for warm point lookups")
+      c.terminate()
+    } finally { spark.sparkContext.removeSparkListener(listener); srv.stop() }
+  }
+
+  test("row-limited Execute over a driver-resident result suspends and resumes in order") {
+    val gs = new GraftSession(spark, Files.createTempDirectory("graft_pgwire"))
+    val srv = PgWire.start(gs)
+    val c = new WireClient(srv.boundPort)
+    try {
+      c.startup()
+      Seq("tc", "ta", "tb").foreach(t => c.query(s"CREATE TABLE $t (id INT)"))
+      val q = "SELECT tablename FROM pg_tables WHERE schemaname = 'public'"
+      val local = gs.sql(q)
+      assert(local.queryExecution.executedPlan
+        .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec])
+      val want = local.collect().map(r => Seq(r.getString(0))).toSeq
+      assert(want.size == 3)
+      val body = new ByteArrayOutputStream()
+      val d = new DataOutputStream(body)
+      def c0(s: String): Unit = { d.write(s.getBytes("UTF-8")); d.writeByte(0) }
+      c0(""); c0(q); d.writeShort(0)
+      c.send('P', body.toByteArray)
+      body.reset(); c0(""); c0(""); d.writeShort(0); d.writeShort(0); d.writeShort(0)
+      c.send('B', body.toByteArray)
+      val got = Seq.newBuilder[Seq[String]]
+      for (_ <- 1 to 2) {
+        body.reset(); c0(""); d.writeInt(1)
+        c.send('E', body.toByteArray)
+        c.send('H', Array.empty)
+        val msgs = Iterator.continually(c.readMsg()).takeWhile(_._1 != 's').toSeq
+        val rs = msgs.filter(_._1 == 'D').map(m => c.row(m._2))
+        assert(rs.size == 1, "each Execute(maxRows=1) returns one row, then PortalSuspended")
+        got ++= rs
+      }
+      // the last row drains the portal: CommandComplete, not PortalSuspended
+      body.reset(); c0(""); d.writeInt(1)
+      c.send('E', body.toByteArray)
+      c.send('S', Array.empty)
+      val rest = c.readUntilReady()
+      assert(!rest.exists(_._1 == 's'))
+      got ++= rest.filter(_._1 == 'D').map(m => c.row(m._2))
+      assert(c.cstrBody('C', rest) == Seq("SELECT 3"), "tag counts all portal rows")
+      assert(got.result() == want, "portal rows come back in the result's order")
+      c.terminate()
+    } finally srv.stop()
+  }
 }
