@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * the engine's native expressions as SQL functions so `spark.sql` users
   * get them without the Column API — `dot_exact(a, b)`,
   * `dot_exact_fd(a, b)`, `graft_minhash(shingles, k)` — and the
-  * engine's optimizer rules ([[IntersectCountRule]], [[PointLookupRule]]).
+  * engine's optimizer rules ([[IntersectCountRule]], [[PointLookupRule]],
+  * [[SortLocalRule]]).
   * Installed by [[graft.Engine]] via `builder.withExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -19,6 +20,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => IntersectCountRule)
     e.injectOptimizerRule(PointLookupRule)
+    e.injectOptimizerRule(_ => SortLocalRule)
     e.injectFunction((FunctionIdentifier("dot_exact"),
       info("dot_exact", "dot_exact(array<float>, array<float>) - exact decimal-quantized dot product"),
       (args: Seq[Expression]) => DotExactExpr(args(0), args(1))))

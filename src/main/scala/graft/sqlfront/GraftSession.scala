@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.matching.Regex
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.View
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -307,7 +308,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     spark.sql(s"DROP DATABASE IF EXISTS $name CASCADE")
     // recursive delete of the database's whole storage namespace
     val rootDir = dbRoot(name)
-    PointLookup.release(rootDir)
+    releaseTableState(rootDir)
     val walk = Files.walk(rootDir)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))
@@ -414,27 +415,34 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     snapshotDf(t, pkTag).select(t.visibleColumns.map(c => col(c.name)): _*)
   }
 
-  /** Bumped on every data write that is INVISIBLE to the catalog
-    * generation — INSERT/COPY append part-files without a catalog save.
-    * Every other mutation (UPDATE/DELETE/TRUNCATE publish new version
-    * dirs via putTable; matview publish via putView; ROLLBACK via
-    * restore) already bumps the generation. Together the two counters
-    * capture "anything a registered temp view could be stale against". */
-  @volatile private var dataGen = 0L
+  /** Fast-path tag of [[registerAll]]: (session identity, catalog
+    * identity, catalog generation, append counts, ANALYZE stats). Every
+    * write a registered temp view could be stale against moves it:
+    * UPDATE/DELETE/TRUNCATE/MERGE, matview publishes and ROLLBACK move the
+    * catalog generation, INSERT/COPY appends and ROLLBACK's un-appends
+    * move [[GraftSession.appends]], and ANALYZE replaces the stats map. */
+  private def regTag: (AnyRef, AnyRef, Long, AnyRef, AnyRef) =
+    (this, ctx.cat, catalog.generation, GraftSession.appends.get, statsCache)
 
   /** Register every table, view and matview as temp views so spark.sql
     * can resolve them (views in creation order → views-on-views work),
     * plus pg_catalog-lite introspection views (reference
     * kv/PgCatalogManager.java: pg_class / pg_attribute emulation).
     *
-    * Gated on (session identity, catalog generation, data generation):
-    * a registered DataFrame captures the snapshot dir's file listing at
-    * creation, so it must rebuild after any write — but statement runs
-    * with NO intervening write (the common case in a query-heavy
-    * session) reuse the standing registrations instead of re-listing
-    * every table's directory per statement. The marker is global: after
-    * a different GraftSession registered ITS tables on the shared
-    * SparkSession, this one re-registers even at unchanged counters. */
+    * A registered DataFrame captures its snapshot dir's file listing at
+    * creation. Statements with no intervening write (the common case in
+    * a query-heavy session) fast-path out on [[regTag]] without touching
+    * anything. The tag is global: after a different GraftSession
+    * registered ITS tables on the shared SparkSession, this one takes the
+    * slow path even at an unchanged tag. The slow path rebuilds only the
+    * temp views whose inputs changed (see [[install]]): a table's TableDef
+    * (with its version), ANALYZE stats entry and append count; a
+    * matview's ViewDef (with its version); a plain view's definition or
+    * any temp view it reads. It also rebuilds a temp view whose installed
+    * plan Spark's session catalog no longer holds — a sibling session's
+    * registration, MatviewMaintenance's streaming shadow, DROP and
+    * ROLLBACK's drops — so a write re-lists the tables it wrote and
+    * re-plans only the views over them. */
   def registerAll(): Unit = withRegWrite {
     // Spark's current database is session-global: a sibling context or
     // GraftSession (or a fresh constructor's USE graft) may have moved
@@ -447,7 +455,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     }
     // catalog identity is part of the tag: after a database switch the
     // NEW catalog's generation can coincide with the old tag's number
-    val tag = (this: AnyRef, ctx.cat: AnyRef, catalog.generation, dataGen)
+    val tag = regTag
     if (GraftSession.lastRegistrar.get() == tag) { registerPgCatalog(); return }
     // Invalidate first, claim AFTER the loop succeeds: if a view body
     // throws mid-loop the tag stays unset and the next call re-registers
@@ -466,36 +474,42 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // racing sibling's set is taken over by exactly one of the racers,
     // and the other re-registers on its next tag mismatch as usual.
     // NOTE (known trade-off, not a defect): two contexts ALTERNATING
-    // databases ping-pong this tag and pay a full re-registration per
-    // statement, serialized under the reg write lock — inherent to the shared
-    // SparkSession's single temp-view namespace. Single-database
-    // workloads (and any run of same-database statements) keep the
-    // fast path. A per-context SparkSession.newSession() would remove
-    // the ping-pong at the cost of per-session conf/extension plumbing.
+    // databases ping-pong this tag, and each turn rebuilds the temp views
+    // the other replaced, serialized under the reg write lock — inherent
+    // to the shared SparkSession's single temp-view namespace.
+    // Single-database workloads (and any run of same-database statements)
+    // keep the fast path. A per-context SparkSession.newSession() would
+    // remove the ping-pong at the cost of per-session conf/extension
+    // plumbing.
     val liveNames = (catalog.tables.keySet ++ catalog.views.keySet).toSet
-    (GraftSession.lastRegisteredNames.getAndSet(liveNames) -- liveNames)
-      .foreach(spark.catalog.dropTempView(_))
+    (GraftSession.lastRegisteredNames.getAndSet(liveNames) -- liveNames).foreach { n =>
+      spark.catalog.dropTempView(n)
+      GraftSession.installed.remove(n)
+    }
     catalog.tables.values.foreach { t =>
-      val df = visibleDf(t)
-      // stats→plan feedback: a table whose FRESH ANALYZE stats put it
-      // under the broadcast threshold registers with a broadcast hint,
-      // so joins against it skip the shuffle even when parquet file
-      // sizes (many small part-files) overestimate it. Stale stats
-      // (version moved since ANALYZE) never hint — a wrong broadcast
-      // of a now-large table would be an OOM, not a slowdown.
-      val hinted = statsCache.get(statsKey(t.name)) match {
-        case Some(st) if st.version == t.version &&
-          st.rowCount * (t.visibleColumns.size * 32L) < 10L * 1024 * 1024 =>
-          broadcast(df)
-        case _ => df
+      val stats = statsCache.get(statsKey(t.name))
+      val appends = GraftSession.appends.get.getOrElse(catalog.tableDir(t).getParent.toString, 0L)
+      install(t.name, (t, stats, appends)) {
+        val df = visibleDf(t)
+        // stats→plan feedback: a table whose FRESH ANALYZE stats put it
+        // under the broadcast threshold registers with a broadcast hint,
+        // so joins against it skip the shuffle even when parquet file
+        // sizes (many small part-files) overestimate it. Stale stats
+        // (version moved since ANALYZE) never hint — a wrong broadcast
+        // of a now-large table would be an OOM, not a slowdown.
+        stats match {
+          case Some(st) if st.version == t.version &&
+            st.rowCount * (t.visibleColumns.size * 32L) < 10L * 1024 * 1024 =>
+            broadcast(df)
+          case _ => df
+        }
       }
-      hinted.createOrReplaceTempView(t.name)
     }
     catalog.views.values.foreach { v =>
       if (v.materialized) {
         val dir = catalog.matviewDir(v)
-        if (Files.exists(dir)) spark.read.parquet(dir.toString).createOrReplaceTempView(v.name)
-      } else spark.sql(rewriteForCtx(v.sql)).createOrReplaceTempView(v.name)
+        if (Files.exists(dir)) install(v.name, v)(spark.read.parquet(dir.toString))
+      } else install(v.name, v)(spark.sql(rewriteForCtx(v.sql)))
     }
     // compareAndSet: a session that lost a concurrent-registration race
     // must NOT claim currency (its temp views may not be the live ones);
@@ -504,13 +518,51 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     registerPgCatalog()
   }
 
+  /** Install `build` as temp view `name`, unless the registration standing
+    * there was built from the same `inputs` of this catalog and is still
+    * current: Spark's session catalog holds the very relation installed
+    * then, and every temp view that relation read still holds the
+    * relation it read (a view's analyzed plan inlines the views it reads,
+    * so it goes stale when one of them is rebuilt). */
+  private def install(name: String, inputs: Any)(build: => DataFrame): Unit = {
+    val sc = spark.sessionState.catalog
+    def holds(n: String, rel: AnyRef): Boolean = sc.getRawTempView(n).exists(_ eq rel)
+    val key = (ctx.cat, inputs)
+    val prev = GraftSession.installed.get(name)
+    if (prev != null && prev.key == key && holds(name, prev.relation) &&
+      prev.reads.forall { case (n, rel) => holds(n, rel) }) return
+    val df = build
+    df.createOrReplaceTempView(name)
+    val reads = df.queryExecution.analyzed.collectWithSubqueries {
+      case v: View if v.isTempView => v.desc.identifier.table
+    }.distinct.flatMap(n => sc.getRawTempView(n).map(n -> (_: AnyRef)))
+    GraftSession.installed.put(name,
+      GraftSession.Installed(key, sc.getRawTempView(name).get, reads))
+  }
+
+  /** Make the next [[registerAll]] take its slow path, which reinstalls
+    * every temp view Spark no longer holds as installed — for a caller
+    * that replaced one without moving any input (MatviewMaintenance's
+    * streaming shadow of a base table). */
+  private[graft] def registrationsReplaced(): Unit = GraftSession.lastRegistrar.set(null)
+
+  /** What the metadata-derived pg_catalog views are built from: tables,
+    * views and enums, with the snapshot versions data writes move left
+    * out. */
+  private def pgMetadata: AnyRef =
+    (catalog.tables.values.map(_.copy(version = 0L)).toSeq,
+      catalog.views.values.map(_.copy(version = 0L)).toSeq, catalog.enums.values.toSeq)
+
   /** Rebuild the pg_catalog temp views only when the catalog actually
     * changed — they derive from table/view/enum METADATA, never from data
     * files, and materializing ~12 local DataFrames per statement is
-    * measurable in DDL-heavy workloads. The marker is GLOBAL and keyed on
-    * (session identity, generation): temp views live on the shared
+    * measurable in DDL-heavy workloads. Two markers, both GLOBAL and keyed
+    * on session and catalog identity (temp views live on the shared
     * SparkSession, so after a different GraftSession registered ITS
-    * catalog, this one must re-register even at an unchanged generation. */
+    * catalog, this one must re-register): pg_settings and pg_stats
+    * refresh whenever the catalog generation moves; the metadata views
+    * only when [[pgMetadata]] changes, so an UPDATE/DELETE/MERGE, which
+    * moves a table's version and nothing else, rebuilds none of them. */
   private def registerPgCatalog(): Unit = {
     val tag = (this: AnyRef, ctx.cat: AnyRef, catalog.generation)
     if (GraftSession.lastPgRegistrar.get() == tag) return
@@ -518,6 +570,23 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // failure mid-build leaves the tag unset (next call re-registers),
     // and a session that lost a concurrent race does not claim currency
     GraftSession.lastPgRegistrar.set(null)
+    import spark.implicits._
+    val metaTag = (this: AnyRef, ctx.cat: AnyRef, pgMetadata)
+    if (GraftSession.lastPgMetaRegistrar.get() != metaTag) {
+      GraftSession.lastPgMetaRegistrar.set(null)
+      registerPgMetadata()
+      GraftSession.lastPgMetaRegistrar.compareAndSet(null, metaTag)
+    }
+    // pg_settings: live session configuration (reference serves a fixed
+    // GUC list at protocol level; here the real Spark conf).
+    spark.conf.getAll.toSeq.map { case (k, vl) => (k, vl) }
+      .toDF("name", "setting").createOrReplaceTempView("pg_settings")
+    registerPgStats()
+    GraftSession.lastPgRegistrar.compareAndSet(null, tag)
+  }
+
+  /** The pg_catalog views derived from catalog metadata alone. */
+  private def registerPgMetadata(): Unit = {
     import spark.implicits._
     (catalog.tables.values.map(t => (relOid(t.name), t.name, NsPublic, "r")).toSeq ++
       catalog.views.values.map(v =>
@@ -576,12 +645,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         .toDF("proname", "pronamespace").createOrReplaceTempView("pg_proc")
       pgProcRegistered = true
     }
-    // pg_settings: live session configuration (reference serves a fixed
-    // GUC list at protocol level; here the real Spark conf).
-    spark.conf.getAll.toSeq.map { case (k, vl) => (k, vl) }
-      .toDF("name", "setting").createOrReplaceTempView("pg_settings")
-    registerPgStats()
-
     // pg_constraint: PK / UNIQUE / FK rows synthesized from the same
     // metadata the engine enforces (reference kv/PgCatalogManager.java:
     // 64-78 registration, kv/PgCatalogTable.java:235-272 shape). conkey /
@@ -629,7 +692,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     conRows.filter(_._4 == "f").map(r => (r._1, r._6, "n"))
       .toDF("objid", "refobjid", "deptype").createOrReplaceTempView("pg_depend")
     registerStaticPgCatalog()
-    GraftSession.lastPgRegistrar.compareAndSet(null, tag)
   }
 
   /** attnum: 1-based position among VISIBLE columns, matching
@@ -708,8 +770,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * stale mid-analysis. */
   private def registrationsCurrent: Boolean =
     spark.catalog.currentDatabase == ctx.dbName &&
-      GraftSession.lastRegistrar.get() ==
-        ((this: AnyRef, ctx.cat: AnyRef, catalog.generation, dataGen)) &&
+      GraftSession.lastRegistrar.get() == regTag &&
       GraftSession.lastPgRegistrar.get() ==
         ((this: AnyRef, ctx.cat: AnyRef, catalog.generation))
 
@@ -960,7 +1021,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         val dir = catalog.tableDir(t)
         val extra = listDir(dir) -- had
         extra.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-        if (extra.nonEmpty) Some(name) else None
+        if (extra.nonEmpty) { GraftSession.appended(dir.getParent); Some(name) } else None
       }
     }.toSet
     // maintainers may hold state built from rolled-back rows
@@ -1196,6 +1257,34 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
   private def minRetained(rootName: String): Long = {
     val f = minVerFile(rootName)
     if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
+  }
+
+  /** The version a new table `name` starts at: past every `v<n>`
+    * snapshot dir a dropped or rolled-back table of the same name left in
+    * its directory (DROP TABLE keeps them so a ROLLBACK can restore the
+    * table), so the new table starts empty and nothing is deleted. */
+  private def firstVersion(name: String): Long =
+    listDir(catalog.root.resolve(name)).collect { case versionDirRe(n) => n.toLong + 1 }
+      .foldLeft(0L)(math.max)
+
+  private val versionDirRe = """v(\d{1,18})""".r
+
+  /** A table's storage directory is named after it, next to the
+    * directories and files the engine keeps in the same database
+    * directory (other databases, matview snapshots, maintenance
+    * checkpoints, the transaction journal); a table name that could
+    * collide with them is refused. */
+  private def requireStorageName(name: String): Unit =
+    require(!Seq("_db_", "_mv_", "_ckpt_", "_txn_").exists(name.startsWith),
+      s"table name $name is reserved: names starting with _db_, _mv_, _ckpt_ or _txn_ " +
+        "are the engine's own storage")
+
+  /** Drop the per-directory state held for the tables under `dir` (one
+    * table's directory, or a whole database root): their point-lookup
+    * indexes and append counts. */
+  private def releaseTableState(dir: Path): Unit = {
+    PointLookup.release(dir)
+    GraftSession.forgetAppends(dir)
   }
 
   private def deleteRecursively(p: Path): Unit = {
@@ -1474,9 +1563,10 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       case None => catalog.tables.values.toSeq
     }
     targets.foreach(analyzeTable)
+    // the new stats map moves registerAll's tag, and each table's stats
+    // entry is an input of its registration, so fresh stats
+    // broadcast-hint the views that need it
     registerPgStats()
-    // force re-registration so fresh stats can broadcast-hint the views
-    dataGen += 1
     ok("ANALYZE", targets.size.toLong)
   }
 
@@ -1650,6 +1740,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         if (ifNot != null) return ok("CREATE TABLE (exists)")
         throw new IllegalArgumentException(s"table exists: $name")
       }
+      requireStorageName(name)
       // clear any stale inline-PK bookkeeping from a previous same-name
       // table (DROP + CREATE must not inherit the old definition's PK)
       inlinePkCols = inlinePkCols.filterNot(_._1 == name)
@@ -1696,7 +1787,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         val sq = s"${name}_${c.name}_seq"
         if (!catalog.sequences.contains(sq)) catalog.putSequence(SequenceDef(sq))
       }
-      catalog.putTable(TableDef(name, cols, pk, version = 0L, hasRowId = hasRowId,
+      catalog.putTable(TableDef(name, cols, pk, version = firstVersion(name), hasRowId = hasRowId,
         uniqueKeys = uniqueKeys))
       ok("CREATE TABLE")
     case _ => throw new IllegalArgumentException(s"cannot parse CREATE TABLE: $stmt")
@@ -1719,6 +1810,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
           if (ifNot != null) return ok("CREATE TABLE (exists)")
           throw new IllegalArgumentException(s"table exists: $name")
         }
+        requireStorageName(name)
         registerAll()
         val src = spark.sql(PgRewrite.rewrite(sel))
         val colNames = src.schema.fields.map(_.name.toLowerCase).toSeq
@@ -1732,7 +1824,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         val cols = ColumnDef(TableDef.RowId, "BIGINT", notNull = true,
           serial = true) +: dataCols
         catalog.putSequence(SequenceDef(s"${name}_${TableDef.RowId}_seq"))
-        val t = TableDef(name, cols, Seq.empty, version = 0L, hasRowId = true)
+        val t = TableDef(name, cols, Seq.empty, version = firstVersion(name), hasRowId = true)
         catalog.putTable(t)
         insertRows(t, Some(colNames.mkString(",")), src)
         ok("CREATE TABLE AS")
@@ -1798,7 +1890,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         names.split(",").map(_.trim.replaceAll("\"", "").toLowerCase).foreach { n =>
           if (catalog.getTable(n).isEmpty && ifEx == null)
             throw new IllegalArgumentException(s"no such table: $n")
-          catalog.getTable(n).foreach(t => PointLookup.release(catalog.tableDir(t).getParent))
+          catalog.getTable(n).foreach(t => releaseTableState(catalog.tableDir(t).getParent))
           catalog.dropTable(n)
           spark.catalog.dropTempView(n)
         }
@@ -1817,7 +1909,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       // A rolled-back transaction's publish can have left that dir behind
       // with its rows; the write verbs overwrite it, TRUNCATE empties it
       val nt = t.copy(version = t.version + 1)
-      PointLookup.release(catalog.tableDir(t).getParent)
+      releaseTableState(catalog.tableDir(t).getParent)
       deleteRecursively(catalog.tableDir(nt))
       Files.createDirectories(catalog.tableDir(nt))
       catalog.putTable(nt)
@@ -1843,8 +1935,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     val newName = rawNew.replaceAll("\"", "").toLowerCase
     require(catalog.getTable(newName).isEmpty && !catalog.views.contains(newName),
       s"relation exists: $newName")
+    requireStorageName(newName)
     val oldDir = catalog.root.resolve(t.name)
-    PointLookup.release(oldDir)
+    releaseTableState(oldDir)
     if (Files.exists(oldDir)) Files.move(oldDir, catalog.root.resolve(newName))
     t.columns.filter(_.serial).foreach { c =>
       val oldSeq = s"${t.name}_${c.name}_seq"
@@ -2231,8 +2324,12 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
 
   /** REFRESH MATERIALIZED VIEW v [INCREMENTALLY | CONTINUOUSLY]:
     * bare = full recompute; INCREMENTALLY = one-shot streaming refresh of
-    * only the part-files appended since the last call; CONTINUOUSLY =
-    * start the background maintainer (the reference's scheduler job,
+    * only the part-files appended since the last call (a write that
+    * moved a snapshot version resets the held state: the refresh streams
+    * the new snapshots from scratch when the last refresh before it read
+    * held state, and otherwise runs the bare full recompute with no
+    * stream started); CONTINUOUSLY = start
+    * the background maintainer (the reference's scheduler job,
     * kv/jobs/BackgroundJobScheduler.java, as a SQL statement) — stopped
     * by DROP / redefinition / any snapshot version bump. */
   private def refreshMatview(stmt: String): DataFrame = {
@@ -3123,7 +3220,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
           // validation rides the append's write job (observe-fused, ONE
           // Spark job); a violation discards the staged files
           insertFusedAppend(t, aligned)
-          dataGen += 1 // append is invisible to the catalog generation
           returning.map(r => returningDf(t, aligned, r)).getOrElse(ok("INSERT", n))
         case Some(OnConflictClause(target, byCon, None)) =>
           val resolved = byCon.map(constraintColumns(t, _)).getOrElse(target)
@@ -3166,7 +3262,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // the kept-row tally rides the validation aggregate, which rides the
     // append's write job
     val kept = insertFusedAppend(t, out)
-    dataGen += 1
     returning.map(r => returningDf(t, out, r)).getOrElse(ok("INSERT", kept))
   }
 
@@ -3941,6 +4036,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         if (!n.startsWith("_") && !n.startsWith("."))
           { Files.move(f, dir.resolve(n)); () }
       } finally s.close()
+      GraftSession.appended(dir.getParent)
       res
     } finally deleteRecursively(stage)
   }
@@ -3954,11 +4050,48 @@ object GraftSession {
   private[sqlfront] val lastPgRegistrar =
     new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, Long)](null)
 
-  /** (session identity, catalog identity, catalog generation, data
-    * generation) of the last full table/view registration — see
-    * registerAll. */
+  /** (session identity, catalog identity, pg_catalog metadata) of the
+    * last registration of the metadata-derived pg_catalog views — see
+    * registerPgCatalog. */
+  private[sqlfront] val lastPgMetaRegistrar =
+    new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, AnyRef)](null)
+
+  /** The tag (see regTag) of the last table/view registration that
+    * completed — see registerAll. */
   private[sqlfront] val lastRegistrar =
-    new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, Long, Long)](null)
+    new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, Long, AnyRef, AnyRef)](null)
+
+  /** Table directory → number of appends into its snapshot dirs:
+    * INSERT/COPY moving part files in, and ROLLBACK removing them. Neither
+    * moves the table's version, yet each changes the file listing a
+    * registered temp view captured, so the count is an input of the
+    * table's registration. Global, like the temp views: a sibling
+    * session's append to a shared warehouse counts too. */
+  private[sqlfront] val appends =
+    new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](Map.empty)
+
+  private[sqlfront] def appended(tableDir: Path): Unit = {
+    val d = tableDir.toString
+    appends.updateAndGet(m => m.updated(d, m.getOrElse(d, 0L) + 1))
+  }
+
+  /** Remove the append counts of `dir` and every table directory under
+    * it, when DROP, TRUNCATE, RENAME or DROP DATABASE retire them. */
+  private[sqlfront] def forgetAppends(dir: Path): Unit = {
+    val d = dir.toString
+    appends.updateAndGet(_.filterNot { case (k, _) => k == d || k.startsWith(d + "/") })
+  }
+
+  /** A standing temp-view registration: the catalog and inputs it was
+    * built from, the relation Spark's session catalog got, and the temp
+    * views (name → relation) its plan read. */
+  private[sqlfront] final case class Installed(key: Any, relation: AnyRef,
+      reads: Seq[(String, AnyRef)])
+
+  /** Temp-view name → its standing registration, whichever session made
+    * it — see registerAll. */
+  private[sqlfront] val installed =
+    new java.util.concurrent.ConcurrentHashMap[String, Installed]()
 
   /** Table/view names the last registerAll registered — the next
     * registration for a DIFFERENT catalog sweeps names it does not

@@ -29,12 +29,22 @@ import graft.sqlfront.{GraftSession, PgRewrite, TypeMap}
   * dir (copy-on-write), and a joined dimension changing invalidates held
   * aggregation state even when the base table did not move — so the
   * checkpoint records the version of EVERY catalog table at build time.
-  * Any drift resets the checkpoint and the new snapshots stream from
-  * scratch (still incremental thereafter). A drift observed by a RUNNING
-  * [[continuous]] query fails that query loudly — a background maintainer
-  * must never keep publishing silently stale state. Views whose SQL a
-  * streaming plan can't express (no aggregate, LIMIT, …) fall back to a
-  * full recompute.
+  * Any drift resets the checkpoint. How [[refreshOnce]] rebuilds after
+  * a reset depends on whether the view's held state has been worth
+  * keeping: state a stream seeds pays off only when a later refresh
+  * streams over it (appends alone since the reset). When the last
+  * refresh before the reset did read held state, the reset streams the
+  * new snapshots from scratch (still incremental thereafter, one pass
+  * per reset); otherwise no state seeded since the previous reset was
+  * ever read, so it recomputes the view as a batch (the bare REFRESH
+  * path), records the current stamp and starts no stream — the next
+  * refresh after appends alone then streams the snapshot into fresh
+  * state. A [[continuous]] maintainer always streams, resetting the
+  * checkpoint on drift. A drift observed by a RUNNING [[continuous]] query fails
+  * that query loudly — a background maintainer must never keep
+  * publishing silently stale state. Views whose SQL a streaming plan
+  * can't express (no aggregate, LIMIT, …) fall back to a full
+  * recompute.
   *
   * At most one maintenance query runs per (warehouse, view): starting
   * [[continuous]] twice throws, and [[refreshOnce]] while a continuous
@@ -137,7 +147,8 @@ object MatviewMaintenance {
 
   /** One incremental refresh of matview `name`; returns the number of new
     * base-table rows processed (0 = already current, -1 = maintained by a
-    * fallback full recompute or an active continuous query). */
+    * full recompute — a reset no held state was read since, or SQL that
+    * cannot stream — or by an active continuous query). */
   def refreshOnce(gs: GraftSession, name: String): Long = {
     val key = (gs.catalog.root.toString, name.toLowerCase)
     active.get(key).filter(_.isActive) match {
@@ -146,7 +157,19 @@ object MatviewMaintenance {
     }
     val v = gs.catalog.views(name.toLowerCase)
     require(v.materialized, s"$name is not materialized")
-    startQuery(gs, name, None) match {
+    val t = baseTable(gs, v).getOrElse { gs.materialize(v); return -1L }
+    val ckptRoot = gs.catalog.root.resolve("_ckpt_" + v.name)
+    val warm = ckptRoot.resolve("_warm")
+    val wasWarm = Files.exists(warm)
+    val (stamp, moved) = restamp(gs, v, t)
+    // a reset with no refresh reading held state since the previous one:
+    // state streamed now would likely be discarded unread again, so
+    // recompute as a batch and start no stream
+    if (moved && !wasWarm) { gs.materialize(v); return -1L }
+    // this refresh streams over state a previous one seeded: keeping
+    // state pays off for this view, so its next reset streams
+    if (!moved && Files.exists(ckptRoot.resolve("ckpt"))) Files.writeString(warm, "")
+    startQuery(gs, v, t, stamp, None) match {
       case None => -1L // fell back to full materialize
       case Some(q) =>
         try q.processAllAvailable() finally q.stop()
@@ -164,34 +187,48 @@ object MatviewMaintenance {
     val key = (gs.catalog.root.toString, name.toLowerCase)
     active.get(key).filter(_.isActive).foreach(_ =>
       throw new IllegalStateException(s"continuous maintenance already running for $name"))
-    val q = startQuery(gs, name,
+    def notStreamable = new IllegalArgumentException(
+      s"cannot maintain $name incrementally (view SQL is not streamable)")
+    val v = gs.catalog.views(name.toLowerCase)
+    val t = baseTable(gs, v).getOrElse { gs.materialize(v); throw notStreamable }
+    val q = startQuery(gs, v, t, restamp(gs, v, t)._1,
       Some(org.apache.spark.sql.streaming.Trigger.ProcessingTime(triggerInterval)))
-      .getOrElse(throw new IllegalArgumentException(
-        s"cannot maintain $name incrementally (view SQL is not streamable)"))
+      .getOrElse(throw notStreamable)
     active(key) = q
     q
   }
 
-  /** Build and start the maintenance stream. Returns None after falling
-    * back to a full recompute (un-streamable SQL / no single base). */
-  private def startQuery(gs: GraftSession, name: String,
-      trigger: Option[org.apache.spark.sql.streaming.Trigger]): Option[StreamingQuery] = {
-    val spark = gs.spark
-    val v = gs.catalog.views(name.toLowerCase)
-    val baseOpt = v.sql match {
+  /** Record the current [[versionStamp]] in view `v`'s checkpoint —
+    * checkpoint validity is tied to every snapshot it may hold state
+    * from, so a recorded stamp that no longer matches first deletes the
+    * checkpoint. Returns the stamp and whether the recorded one moved. */
+  private def restamp(gs: GraftSession, v: graft.catalog.ViewDef,
+      base: graft.catalog.TableDef): (String, Boolean) = {
+    val ckptRoot = gs.catalog.root.resolve("_ckpt_" + v.name)
+    val marker = ckptRoot.resolve("_basever")
+    val stamp = versionStamp(gs, v, Some(base.name))
+    val moved = Files.exists(marker) && Files.readString(marker).trim != stamp
+    if (moved) deleteRec(ckptRoot)
+    Files.createDirectories(ckptRoot)
+    Files.writeString(marker, stamp)
+    (stamp, moved)
+  }
+
+  /** The table a view's SQL streams from: the first FROM target. */
+  private def baseTable(gs: GraftSession, v: graft.catalog.ViewDef): Option[graft.catalog.TableDef] =
+    v.sql match {
       case fromRe(t) => gs.catalog.getTable(t.replaceAll("\"", "").toLowerCase)
       case _ => None
     }
-    val t = baseOpt.getOrElse { gs.materialize(v); return None }
 
+  /** Build and start the maintenance stream of view `v` from base table
+    * `t`, whose checkpoint [[restamp]] just stamped `stamp`. Returns None
+    * after falling back to a full recompute (un-streamable SQL). */
+  private def startQuery(gs: GraftSession, v: graft.catalog.ViewDef,
+      t: graft.catalog.TableDef, stamp: String,
+      trigger: Option[org.apache.spark.sql.streaming.Trigger]): Option[StreamingQuery] = {
+    val spark = gs.spark
     val ckptRoot = gs.catalog.root.resolve("_ckpt_" + v.name)
-    // checkpoint validity is tied to every snapshot it may hold state from
-    val marker = ckptRoot.resolve("_basever")
-    val stamp = versionStamp(gs, v, Some(t.name))
-    if (Files.exists(marker) && Files.readString(marker).trim != stamp)
-      deleteRec(ckptRoot)
-    Files.createDirectories(ckptRoot)
-    Files.writeString(marker, stamp)
 
     val dir = gs.catalog.tableDir(t)
     Files.createDirectories(dir)
@@ -204,6 +241,10 @@ object MatviewMaintenance {
     spark.readStream.schema(schema).parquet(dir.toString)
       .select(t.visibleColumns.map(c => org.apache.spark.sql.functions.col(c.name)): _*)
       .createOrReplaceTempView(t.name)
+    // the shadow moves no registration input: without this, a stream that
+    // finds no new file publishes nothing, and the finally's registerAll
+    // would fast-path out and keep the streaming twin as the table's view
+    gs.registrationsReplaced()
     try {
       val agg = spark.sql(PgRewrite.rewrite(v.sql))
       var writer = agg.writeStream.outputMode("complete")

@@ -1209,4 +1209,41 @@ class PgWireSpec extends SparkSpec {
       c.terminate()
     } finally srv.stop()
   }
+
+  test("an ORDER BY read of a pg_catalog view returns sorted rows and runs no Spark job") {
+    val (srv, c) = freshServer()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+    try {
+      c.startup()
+      Seq("tc", "ta", "tb").foreach(t => c.query(s"CREATE TABLE $t (id INT, v TEXT, w INT)"))
+      def rows(q: String): Seq[Seq[String]] = {
+        val msgs = c.query(q)
+        assert(!msgs.exists(_._1 == 'E'), c.cstrBody('E', msgs))
+        msgs.filter(_._1 == 'D').map(m => c.row(m._2))
+      }
+      val reads = Seq(
+        "SELECT tablename FROM pg_tables WHERE schemaname = 'public' ORDER BY tablename" ->
+          Seq(Seq("ta"), Seq("tb"), Seq("tc")),
+        "SELECT tablename FROM pg_tables ORDER BY tablename DESC" ->
+          Seq(Seq("tc"), Seq("tb"), Seq("ta")),
+        "SELECT attname FROM pg_attribute WHERE relname = 'tb' ORDER BY attnum DESC" ->
+          Seq(Seq("w"), Seq("v"), Seq("id")),
+        "SELECT nspname FROM pg_namespace ORDER BY nspname" ->
+          Seq(Seq("information_schema"), Seq("pg_catalog"), Seq("public")))
+      // the first statement registers the session's views
+      for ((q, want) <- reads) assert(rows(q) == want, q)
+      spark.sparkContext.addSparkListener(listener)
+      drain()
+      jobs.set(0)
+      for ((q, want) <- reads) assert(rows(q) == want, q)
+      drain()
+      assert(jobs.get == 0, s"${jobs.get} Spark jobs for sorted pg_catalog reads")
+      c.terminate()
+    } finally { spark.sparkContext.removeSparkListener(listener); srv.stop() }
+  }
 }
