@@ -85,12 +85,6 @@ final class Catalog(val root: Path) {
   def views: Map[String, ViewDef] = _views
   def enums: Map[String, EnumDef] = _enums
 
-  /** Monotonic mutation counter, bumped on every persisted change — lets
-    * metadata-derived caches (the pg_catalog temp views) skip rebuilding
-    * when nothing moved. */
-  @volatile private var _generation = 0L
-  def generation: Long = _generation
-
   load()
 
   def tableDir(t: TableDef): Path = root.resolve(t.name).resolve(s"v${t.version}")
@@ -180,10 +174,8 @@ final class Catalog(val root: Path) {
     * (re-entrant, so this is free), but external callers (BEGIN's journal
     * snapshot) share the single catalog.json.tmp path — two unsynchronized
     * writers could interleave writeString on the tmp file and atomically
-    * publish torn JSON. The monitor also makes the `_generation`
-    * read-modify-write atomic. */
+    * publish torn JSON. */
   def save(): Unit = synchronized {
-    _generation += 1
     val sb = new StringBuilder("{\n")
     sb.append("\"tables\":[")
     sb.append(tables.values.map { t =>

@@ -253,6 +253,11 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     }
   }
 
+  /** The input of the `pg_database` registration: [[databases]] as of
+    * this session's last CREATE DATABASE, DROP DATABASE or `\c`, so the
+    * per-statement registration check lists no directory. */
+  @volatile private var databaseList: Seq[String] = databases
+
   private def requireDbName(name: String): Unit =
     require(name.matches("[a-z_][a-z0-9_]*"),
       s"invalid database name: $name (lowercase identifier required)")
@@ -264,7 +269,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     if (dbExists(name))
       throw new IllegalArgumentException(s"""database "$name" already exists""")
     Files.createDirectories(dbRoot(name))
-    registerPgDatabase()
+    databaseList = databases
   }
 
   def dropDatabase(name0: String, ifExists: Boolean): Unit = {
@@ -308,7 +313,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     spark.sql(s"DROP DATABASE IF EXISTS $name CASCADE")
     // recursive delete of the database's whole storage namespace
     val rootDir = dbRoot(name)
-    releaseTableState(rootDir)
+    PointLookup.release(rootDir)
     val walk = Files.walk(rootDir)
     try walk.sorted(java.util.Comparator.reverseOrder())
       .forEach(p => Files.deleteIfExists(p))
@@ -319,15 +324,16 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // entry that a recreated same-name database inherits (review find —
     // catalogFor's in-monitor dbExists check closes the other half)
     dbCatalogs.synchronized { dbCatalogs.remove(name) }
-    registerPgDatabase()
+    databaseList = databases
   }
 
   /** Switch THIS CONTEXT to `name` (psql `\c`) — with per-connection
     * binding a wire connection's `\c` moves only that connection; other
-    * contexts keep their databases. Stale temp views of the previous
-    * database are swept by registerAll on the next statement (its tag
-    * carries the catalog identity, so the swap always invalidates and
-    * the sweep drops names the new catalog does not define). */
+    * contexts keep their databases. The next statement's [[registerAll]]
+    * moves the temp views over: every table, view and matview
+    * registration carries its catalog's identity, so the new catalog's
+    * are rebuilt, and names only the previous database defined are
+    * dropped. */
   def connectDatabase(name0: String): Unit = {
     val name = name0.toLowerCase
     // owner-scoped: another connection's open transaction must not pin
@@ -352,8 +358,8 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       withRegWrite {
         spark.sql(s"CREATE DATABASE IF NOT EXISTS $name")
         spark.sql(s"USE $name")
-        registerPgDatabase()
       }
+      databaseList = databases
     }
   }
 
@@ -362,15 +368,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
   private def dbOid(name: String): Long =
     if (name == "graft") 1L
     else 16384L + (scala.util.hashing.MurmurHash3.stringHash("db:" + name).toLong & 0x7fffffffL)
-
-  /** pg_database is DYNAMIC now (CREATE/DROP DATABASE mutate it without
-    * touching any Catalog generation) — re-registered by the db ops and
-    * once at static-catalog setup. */
-  private def registerPgDatabase(): Unit = {
-    import spark.implicits._
-    databases.map(n => (dbOid(n), n, true))
-      .toDF("oid", "datname", "datallowconn").createOrReplaceTempView("pg_database")
-  }
 
   // ---------------------------------------------------------------- read
 
@@ -415,194 +412,49 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     snapshotDf(t, pkTag).select(t.visibleColumns.map(c => col(c.name)): _*)
   }
 
-  /** Fast-path tag of [[registerAll]]: (session identity, catalog
-    * identity, catalog generation, append counts, ANALYZE stats). Every
-    * write a registered temp view could be stale against moves it:
-    * UPDATE/DELETE/TRUNCATE/MERGE, matview publishes and ROLLBACK move the
-    * catalog generation, INSERT/COPY appends and ROLLBACK's un-appends
-    * move [[GraftSession.appends]], and ANALYZE replaces the stats map. */
-  private def regTag: (AnyRef, AnyRef, Long, AnyRef, AnyRef) =
-    (this, ctx.cat, catalog.generation, GraftSession.appends.get, statsCache)
+  /** One temp view of the session's SQL surface: its name, the inputs its
+    * plan is built from, and how to build it (None: nothing to read, so
+    * the name stays unregistered). */
+  private final class Registration(
+      val name: String, val inputs: Any, val build: () => Option[DataFrame])
 
-  /** Register every table, view and matview as temp views so spark.sql
-    * can resolve them (views in creation order → views-on-views work),
-    * plus pg_catalog-lite introspection views (reference
-    * kv/PgCatalogManager.java: pg_class / pg_attribute emulation).
+  /** Every temp view this context registers, in install order: the
+    * pg_catalog-lite introspection views (reference
+    * kv/PgCatalogManager.java: pg_class / pg_attribute emulation), which
+    * read no other temp view, then the catalog's tables, then its views
+    * and matviews in creation order, so views-on-views resolve.
     *
-    * A registered DataFrame captures its snapshot dir's file listing at
-    * creation. Statements with no intervening write (the common case in
-    * a query-heavy session) fast-path out on [[regTag]] without touching
-    * anything. The tag is global: after a different GraftSession
-    * registered ITS tables on the shared SparkSession, this one takes the
-    * slow path even at an unchanged tag. The slow path rebuilds only the
-    * temp views whose inputs changed (see [[install]]): a table's TableDef
-    * (with its version), ANALYZE stats entry and append count; a
-    * matview's ViewDef (with its version); a plain view's definition or
-    * any temp view it reads. It also rebuilds a temp view whose installed
-    * plan Spark's session catalog no longer holds — a sibling session's
-    * registration, MatviewMaintenance's streaming shadow, DROP and
-    * ROLLBACK's drops — so a write re-lists the tables it wrote and
-    * re-plans only the views over them. */
-  def registerAll(): Unit = withRegWrite {
-    // Spark's current database is session-global: a sibling context or
-    // GraftSession (or a fresh constructor's USE graft) may have moved
-    // it — re-sync so qualified resolution tracks THIS context's database
-    if (spark.catalog.currentDatabase != ctx.dbName) {
-      // a wire context bound at startup may target a database no `\c`
-      // ever mirrored into Spark's catalog — create the namespace first
-      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ctx.dbName}")
-      spark.sql(s"USE ${ctx.dbName}")
-    }
-    // catalog identity is part of the tag: after a database switch the
-    // NEW catalog's generation can coincide with the old tag's number
-    val tag = regTag
-    if (GraftSession.lastRegistrar.get() == tag) { registerPgCatalog(); return }
-    // Invalidate first, claim AFTER the loop succeeds: if a view body
-    // throws mid-loop the tag stays unset and the next call re-registers
-    // instead of skipping over half-registered temp views. The null also
-    // keeps a concurrent session from matching its own stale tag while
-    // this one is mid-rebuild.
-    GraftSession.lastRegistrar.set(null)
-    // Per-connection binding means contexts in DIFFERENT databases take
-    // turns registering on the shared SparkSession — sweep names the
-    // previous registration defined that THIS catalog does not, or a
-    // sibling database's table would keep resolving here (cross-database
-    // leakage; the pre-context code did this sweep inside `\c`).
-    // getAndSet makes take-previous/install-own ATOMIC: two GraftSession
-    // INSTANCES hold different reg locks, and a plain get→set pair could
-    // lose one side's names forever (review find) — with the exchange, a
-    // racing sibling's set is taken over by exactly one of the racers,
-    // and the other re-registers on its next tag mismatch as usual.
-    // NOTE (known trade-off, not a defect): two contexts ALTERNATING
-    // databases ping-pong this tag, and each turn rebuilds the temp views
-    // the other replaced, serialized under the reg write lock — inherent
-    // to the shared SparkSession's single temp-view namespace.
-    // Single-database workloads (and any run of same-database statements)
-    // keep the fast path. A per-context SparkSession.newSession() would
-    // remove the ping-pong at the cost of per-session conf/extension
-    // plumbing.
-    val liveNames = (catalog.tables.keySet ++ catalog.views.keySet).toSet
-    (GraftSession.lastRegisteredNames.getAndSet(liveNames) -- liveNames).foreach { n =>
-      spark.catalog.dropTempView(n)
-      GraftSession.installed.remove(n)
-    }
-    catalog.tables.values.foreach { t =>
-      val stats = statsCache.get(statsKey(t.name))
-      val appends = GraftSession.appends.get.getOrElse(catalog.tableDir(t).getParent.toString, 0L)
-      install(t.name, (t, stats, appends)) {
-        val df = visibleDf(t)
-        // stats→plan feedback: a table whose FRESH ANALYZE stats put it
-        // under the broadcast threshold registers with a broadcast hint,
-        // so joins against it skip the shuffle even when parquet file
-        // sizes (many small part-files) overestimate it. Stale stats
-        // (version moved since ANALYZE) never hint — a wrong broadcast
-        // of a now-large table would be an OOM, not a slowdown.
-        stats match {
-          case Some(st) if st.version == t.version &&
-            st.rowCount * (t.visibleColumns.size * 32L) < 10L * 1024 * 1024 =>
-            broadcast(df)
-          case _ => df
-        }
-      }
-    }
-    catalog.views.values.foreach { v =>
-      if (v.materialized) {
-        val dir = catalog.matviewDir(v)
-        if (Files.exists(dir)) install(v.name, v)(spark.read.parquet(dir.toString))
-      } else install(v.name, v)(spark.sql(rewriteForCtx(v.sql)))
-    }
-    // compareAndSet: a session that lost a concurrent-registration race
-    // must NOT claim currency (its temp views may not be the live ones);
-    // leaving the tag unset/foreign forces it to re-register next call.
-    GraftSession.lastRegistrar.compareAndSet(null, tag)
-    registerPgCatalog()
-  }
-
-  /** Install `build` as temp view `name`, unless the registration standing
-    * there was built from the same `inputs` of this catalog and is still
-    * current: Spark's session catalog holds the very relation installed
-    * then, and every temp view that relation read still holds the
-    * relation it read (a view's analyzed plan inlines the views it reads,
-    * so it goes stale when one of them is rebuilt). */
-  private def install(name: String, inputs: Any)(build: => DataFrame): Unit = {
-    val sc = spark.sessionState.catalog
-    def holds(n: String, rel: AnyRef): Boolean = sc.getRawTempView(n).exists(_ eq rel)
-    val key = (ctx.cat, inputs)
-    val prev = GraftSession.installed.get(name)
-    if (prev != null && prev.key == key && holds(name, prev.relation) &&
-      prev.reads.forall { case (n, rel) => holds(n, rel) }) return
-    val df = build
-    df.createOrReplaceTempView(name)
-    val reads = df.queryExecution.analyzed.collectWithSubqueries {
-      case v: View if v.isTempView => v.desc.identifier.table
-    }.distinct.flatMap(n => sc.getRawTempView(n).map(n -> (_: AnyRef)))
-    GraftSession.installed.put(name,
-      GraftSession.Installed(key, sc.getRawTempView(name).get, reads))
-  }
-
-  /** Make the next [[registerAll]] take its slow path, which reinstalls
-    * every temp view Spark no longer holds as installed — for a caller
-    * that replaced one without moving any input (MatviewMaintenance's
-    * streaming shadow of a base table). */
-  private[graft] def registrationsReplaced(): Unit = GraftSession.lastRegistrar.set(null)
-
-  /** What the metadata-derived pg_catalog views are built from: tables,
-    * views and enums, with the snapshot versions data writes move left
-    * out. */
-  private def pgMetadata: AnyRef =
-    (catalog.tables.values.map(_.copy(version = 0L)).toSeq,
-      catalog.views.values.map(_.copy(version = 0L)).toSeq, catalog.enums.values.toSeq)
-
-  /** Rebuild the pg_catalog temp views only when the catalog actually
-    * changed — they derive from table/view/enum METADATA, never from data
-    * files, and materializing ~12 local DataFrames per statement is
-    * measurable in DDL-heavy workloads. Two markers, both GLOBAL and keyed
-    * on session and catalog identity (temp views live on the shared
-    * SparkSession, so after a different GraftSession registered ITS
-    * catalog, this one must re-register): pg_settings and pg_stats
-    * refresh whenever the catalog generation moves; the metadata views
-    * only when [[pgMetadata]] changes, so an UPDATE/DELETE/MERGE, which
-    * moves a table's version and nothing else, rebuilds none of them. */
-  private def registerPgCatalog(): Unit = {
-    val tag = (this: AnyRef, ctx.cat: AnyRef, catalog.generation)
-    if (GraftSession.lastPgRegistrar.get() == tag) return
-    // same invalidate→build→CAS-claim discipline as registerAll: a
-    // failure mid-build leaves the tag unset (next call re-registers),
-    // and a session that lost a concurrent race does not claim currency
-    GraftSession.lastPgRegistrar.set(null)
+    * A registration's inputs are what its plan is built from that a
+    * statement can change. A table's, view's or matview's are the
+    * catalog's identity (the same definition in two databases reads
+    * different files) and its definition, version included; a table's
+    * add its ANALYZE stats entry, which picks the broadcast hint. A
+    * pg_catalog view's are exactly what its rows are computed from: the
+    * catalog metadata with versions left out, the live Spark conf, the
+    * stats, the database list, or nothing for the static ones. An append
+    * into a table's current snapshot moves none of these, so the writer
+    * removes the table's standing registration instead (see [[appendFused]]
+    * and [[restoreSnapshot]]).
+    *
+    * Listing is free of side effects: a build runs only in [[install]],
+    * so [[registrationsCurrent]] and [[registerAll]] share this list. */
+  private def registrations: Seq[Registration] = {
     import spark.implicits._
-    val metaTag = (this: AnyRef, ctx.cat: AnyRef, pgMetadata)
-    if (GraftSession.lastPgMetaRegistrar.get() != metaTag) {
-      GraftSession.lastPgMetaRegistrar.set(null)
-      registerPgMetadata()
-      GraftSession.lastPgMetaRegistrar.compareAndSet(null, metaTag)
-    }
-    // pg_settings: live session configuration (reference serves a fixed
-    // GUC list at protocol level; here the real Spark conf).
-    spark.conf.getAll.toSeq.map { case (k, vl) => (k, vl) }
-      .toDF("name", "setting").createOrReplaceTempView("pg_settings")
-    registerPgStats()
-    GraftSession.lastPgRegistrar.compareAndSet(null, tag)
-  }
-
-  /** The pg_catalog views derived from catalog metadata alone. */
-  private def registerPgMetadata(): Unit = {
-    import spark.implicits._
-    (catalog.tables.values.map(t => (relOid(t.name), t.name, NsPublic, "r")).toSeq ++
-      catalog.views.values.map(v =>
-        (relOid(v.name), v.name, NsPublic, if (v.materialized) "m" else "v")))
-      .toDF("oid", "relname", "relnamespace", "relkind")
-      .createOrReplaceTempView("pg_class")
-    catalog.tables.values.flatMap(t =>
-      t.visibleColumns.zipWithIndex.map { case (c, i) =>
-        (relOid(t.name), t.name, c.name, c.sqlType, i + 1, c.notNull)
-      }).toSeq
-      .toDF("attrelid", "relname", "attname", "atttype", "attnum", "attnotnull")
-      .createOrReplaceTempView("pg_attribute")
+    val cat = catalog
+    // what the metadata pg_catalog views are built from: tables, views and
+    // enums, with the snapshot versions data writes move left out
+    val meta = (cat.tables.values.map(_.copy(version = 0L)).toSeq,
+      cat.views.values.map(_.copy(version = 0L)).toSeq, cat.enums.values.toSeq)
+    val conf = spark.conf.getAll
+    val db = ctx.dbName
+    val stats = statsCache
+    val dbs = databaseList
+    def reg(name: String, inputs: Any)(build: => DataFrame) =
+      new Registration(name, inputs, () => Some(build))
     // pg_index: one row per PK / unique constraint, synthesized from
     // catalog metadata (reference kv/PgCatalogManager.java emulates the
     // same surface from its TableMetadata).
-    val idxRows = catalog.tables.values.flatMap { t =>
+    lazy val idxRows = cat.tables.values.flatMap { t =>
       val pk =
         if (t.primaryKey.nonEmpty)
           Seq((s"${t.name}_pkey", t.name, true, true, t.primaryKey.mkString(",")))
@@ -614,44 +466,13 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       }
       pk ++ singles ++ composites
     }.toSeq
-    idxRows.toDF("indexname", "relname", "indisunique", "indisprimary", "indkey")
-      .createOrReplaceTempView("pg_index")
-    // pg_tables / pg_indexes: the simplified compatibility views psql and
-    // ORMs query by name (reference kv/PgCatalogTable.java:325-353).
-    catalog.tables.values.map(t => ("public", t.name, "graft")).toSeq
-      .toDF("schemaname", "tablename", "tableowner")
-      .createOrReplaceTempView("pg_tables")
-    idxRows.map { case (iname, rel, uq, _, cols) =>
-      val kw = if (uq) "UNIQUE " else ""
-      ("public", rel, iname, s"CREATE ${kw}INDEX $iname ON $rel ($cols)")
-    }.toDF("schemaname", "tablename", "indexname", "indexdef")
-      .createOrReplaceTempView("pg_indexes")
-    // pg_namespace: fixed schema list (single-database engine, like the
-    // reference's emulation).
-    Seq("public", "pg_catalog", "information_schema").map(Tuple1(_))
-      .toDF("nspname").createOrReplaceTempView("pg_namespace")
-    // pg_type: base types plus user enum types ('b' vs 'e' typtype).
-    val baseTypes = Seq("bool", "int2", "int4", "int8", "float4", "float8",
-      "numeric", "text", "varchar", "date", "time", "timestamp", "timestamptz",
-      "interval", "json", "jsonb", "bytea", "uuid").map((_, "b"))
-    (baseTypes ++ catalog.enums.values.map(e => (e.name, "e")))
-      .toDF("typname", "typtype").createOrReplaceTempView("pg_type")
-    // pg_proc: the callable surface — Spark builtins plus graft's native
-    // SQL-registered expressions (reference lists its function registry).
-    // The registry is static per session, so list it once, not per query.
-    if (!pgProcRegistered) {
-      (spark.catalog.listFunctions().collect().map(f => (f.name, "public")).toSeq :+
-        (("nextval", "pg_catalog"))).distinct
-        .toDF("proname", "pronamespace").createOrReplaceTempView("pg_proc")
-      pgProcRegistered = true
-    }
     // pg_constraint: PK / UNIQUE / FK rows synthesized from the same
     // metadata the engine enforces (reference kv/PgCatalogManager.java:
     // 64-78 registration, kv/PgCatalogTable.java:235-272 shape). conkey /
     // confkey are 1-based attnums into pg_attribute, so the standard
     // introspection join pg_constraint → pg_class → pg_attribute resolves
     // a constraint's columns end-to-end.
-    val conRows = catalog.tables.values.flatMap { t =>
+    lazy val conRows = cat.tables.values.flatMap { t =>
       def nums(ks: Seq[String]): Seq[Int] = ks.map(attnum(t, _))
       val rel = relOid(t.name)
       val pk =
@@ -667,31 +488,222 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
           rel, 0L, nums(k), Seq.empty[Int], true)
       }
       val fks = t.columns.flatMap(c => c.references.map { case (rt, rc) =>
-        val refNums = catalog.getTable(rt).map(r => Seq(attnum(r, rc))).getOrElse(Nil)
+        val refNums = cat.getTable(rt).map(r => Seq(attnum(r, rc))).getOrElse(Nil)
         (relOid(s"${t.name}_${c.name}_fkey"), s"${t.name}_${c.name}_fkey", NsPublic, "f",
           rel, relOid(rt), nums(Seq(c.name)), refNums, true)
       })
       pk ++ singles ++ composites ++ fks
     }.toSeq
-    conRows.toDF("oid", "conname", "connamespace", "contype", "conrelid",
-      "confrelid", "conkey", "confkey", "convalidated")
-      .createOrReplaceTempView("pg_constraint")
-    // pg_attrdef: column DEFAULT expressions, incl. the implicit nextval
-    // of SERIAL columns (reference kv/PgCatalogTable.java:274-286).
-    catalog.tables.values.flatMap { t =>
-      t.visibleColumns.flatMap { c =>
-        val expr =
-          if (c.serial) Some(s"nextval('${t.name}_${c.name}_seq')") else c.default
-        expr.map(e =>
-          (relOid(s"${t.name}_${c.name}_def"), relOid(t.name), attnum(t, c.name), e))
+    val pgViews = Seq(
+      reg("pg_class", meta)(
+        (cat.tables.values.map(t => (relOid(t.name), t.name, NsPublic, "r")).toSeq ++
+          cat.views.values.map(v =>
+            (relOid(v.name), v.name, NsPublic, if (v.materialized) "m" else "v")))
+          .toDF("oid", "relname", "relnamespace", "relkind")),
+      reg("pg_attribute", meta)(
+        cat.tables.values.flatMap(t =>
+          t.visibleColumns.zipWithIndex.map { case (c, i) =>
+            (relOid(t.name), t.name, c.name, c.sqlType, i + 1, c.notNull)
+          }).toSeq
+          .toDF("attrelid", "relname", "attname", "atttype", "attnum", "attnotnull")),
+      reg("pg_index", meta)(
+        idxRows.toDF("indexname", "relname", "indisunique", "indisprimary", "indkey")),
+      // pg_tables / pg_indexes: the simplified compatibility views psql and
+      // ORMs query by name (reference kv/PgCatalogTable.java:325-353).
+      reg("pg_tables", meta)(
+        cat.tables.values.map(t => ("public", t.name, "graft")).toSeq
+          .toDF("schemaname", "tablename", "tableowner")),
+      reg("pg_indexes", meta)(
+        idxRows.map { case (iname, rel, uq, _, cols) =>
+          val kw = if (uq) "UNIQUE " else ""
+          ("public", rel, iname, s"CREATE ${kw}INDEX $iname ON $rel ($cols)")
+        }.toDF("schemaname", "tablename", "indexname", "indexdef")),
+      // pg_type: base types plus user enum types ('b' vs 'e' typtype).
+      reg("pg_type", meta)(
+        (Seq("bool", "int2", "int4", "int8", "float4", "float8", "numeric", "text",
+          "varchar", "date", "time", "timestamp", "timestamptz", "interval", "json",
+          "jsonb", "bytea", "uuid").map((_, "b")) ++ cat.enums.values.map(e => (e.name, "e")))
+          .toDF("typname", "typtype")),
+      reg("pg_constraint", meta)(
+        conRows.toDF("oid", "conname", "connamespace", "contype", "conrelid",
+          "confrelid", "conkey", "confkey", "convalidated")),
+      // pg_attrdef: column DEFAULT expressions, incl. the implicit nextval
+      // of SERIAL columns (reference kv/PgCatalogTable.java:274-286).
+      reg("pg_attrdef", meta)(
+        cat.tables.values.flatMap { t =>
+          t.visibleColumns.flatMap { c =>
+            val expr =
+              if (c.serial) Some(s"nextval('${t.name}_${c.name}_seq')") else c.default
+            expr.map(e =>
+              (relOid(s"${t.name}_${c.name}_def"), relOid(t.name), attnum(t, c.name), e))
+          }
+        }.toSeq.toDF("oid", "adrelid", "adnum", "adbin")),
+      // pg_depend: FK constraints depend on the table they reference —
+      // enough for tools walking drop-order (reference doc list, 'n'ormal).
+      reg("pg_depend", meta)(
+        conRows.filter(_._4 == "f").map(r => (r._1, r._6, "n"))
+          .toDF("objid", "refobjid", "deptype")),
+      // pg_settings: live session configuration (reference serves a fixed
+      // GUC list at protocol level; here the real Spark conf).
+      reg("pg_settings", conf)(conf.toSeq.toDF("name", "setting")),
+      // pg_stats-lite: one row per ANALYZEd column of THIS database,
+      // bare-named (reference kv/PgCatalogManager emulation scope; PG
+      // exposes the same numbers through pg_stats/pg_class.reltuples)
+      reg("pg_stats", (db, stats))(
+        stats.toSeq.flatMap { case (k, st) =>
+          val (kdb, tn) =
+            if (k.contains(".")) { val p = k.split("\\.", 2); (p(0), p(1)) }
+            else ("graft", k)
+          if (kdb != db) Nil
+          else st.cols.map { case (c, ndv, nulls) =>
+            (tn, c, st.rowCount, ndv,
+              if (st.rowCount == 0) 0.0 else nulls.toDouble / st.rowCount)
+          }
+        }.toDF("tablename", "attname", "reltuples", "n_distinct", "null_frac")),
+      reg("pg_database", dbs)(
+        dbs.map(n => (dbOid(n), n, true)).toDF("oid", "datname", "datallowconn")),
+      // the rest never change over a session's life (reference
+      // kv/PgCatalogManager.java doc list). pg_namespace: fixed schema
+      // list, like the reference's emulation.
+      reg("pg_namespace", ())(
+        Seq("public", "pg_catalog", "information_schema").map(Tuple1(_)).toDF("nspname")),
+      // pg_proc: the callable surface — Spark builtins plus graft's native
+      // SQL-registered expressions (reference lists its function registry).
+      reg("pg_proc", ())(
+        (spark.catalog.listFunctions().collect().map(f => (f.name, "public")).toSeq :+
+          (("nextval", "pg_catalog"))).distinct.toDF("proname", "pronamespace")),
+      reg("pg_roles", ())(
+        Seq((10L, "graft", true, true)).toDF("oid", "rolname", "rolsuper", "rolcanlogin")),
+      reg("pg_am", ())(
+        Seq((2L, "heap", "t"), (403L, "btree", "i"), (405L, "hash", "i"))
+          .toDF("oid", "amname", "amtype")),
+      reg("pg_tablespace", ())(
+        Seq((1663L, "pg_default"), (1664L, "pg_global")).toDF("oid", "spcname")),
+      reg("pg_operator", ())(
+        Seq("=", "<>", "<", "<=", ">", ">=", "+", "-", "*", "/", "%", "||",
+          "~~", "!~~", "~", "~*", "!~", "!~*", "->", "->>", "#>", "#>>")
+          .zipWithIndex.map { case (op, i) => (91L + i, op) }.toDF("oid", "oprname")),
+      // COMMENT ON is unsupported (as in the reference) — the table exists
+      // and is empty so introspection joins resolve instead of erroring
+      reg("pg_description", ())(
+        Seq.empty[(Long, Long, Int, String)]
+          .toDF("objoid", "classoid", "objsubid", "description")))
+    val tables = cat.tables.values.map { t =>
+      val st = stats.get(statsKey(t.name))
+      reg(t.name, (cat, t, st)) {
+        val df = visibleDf(t)
+        // stats→plan feedback: a table whose FRESH ANALYZE stats put it
+        // under the broadcast threshold registers with a broadcast hint,
+        // so joins against it skip the shuffle even when parquet file
+        // sizes (many small part-files) overestimate it. Stale stats
+        // (version moved since ANALYZE) never hint — a wrong broadcast
+        // of a now-large table would be an OOM, not a slowdown.
+        st match {
+          case Some(s) if s.version == t.version &&
+            s.rowCount * (t.visibleColumns.size * 32L) < 10L * 1024 * 1024 =>
+            broadcast(df)
+          case _ => df
+        }
       }
-    }.toSeq.toDF("oid", "adrelid", "adnum", "adbin")
-      .createOrReplaceTempView("pg_attrdef")
-    // pg_depend: FK constraints depend on the table they reference —
-    // enough for tools walking drop-order (reference doc list, 'n'ormal).
-    conRows.filter(_._4 == "f").map(r => (r._1, r._6, "n"))
-      .toDF("objid", "refobjid", "deptype").createOrReplaceTempView("pg_depend")
-    registerStaticPgCatalog()
+    }
+    // a matview at version 0 was never materialized (its first
+    // materialize failed) and has no snapshot to read; matviewDf leaves
+    // any other matview without a part file unregistered
+    val views = cat.views.values.collect {
+      case v if !v.materialized => reg(v.name, (cat, v))(spark.sql(rewriteForCtx(v.sql)))
+      case v if v.version > 0 => new Registration(v.name, (cat, v), () => matviewDf(v))
+    }
+    pgViews ++ tables ++ views
+  }
+
+  /** A matview snapshot read with the schema its part files were written
+    * with, taken from one file's footer on the driver the way Spark's own
+    * inference reads it (`spark.read.parquet` alone infers it with a
+    * Spark job, which the first statement after every REFRESH paid).
+    * None when the snapshot has no part file to read. */
+  private def matviewDf(v: ViewDef): Option[DataFrame] = {
+    val dir = catalog.matviewDir(v)
+    listDir(dir).find(n => n.startsWith("part-") && n.endsWith(".parquet")).map { f =>
+      import org.apache.spark.sql.execution.datasources.parquet._
+      val path = new org.apache.hadoop.fs.Path(dir.resolve(f).toUri)
+      val footer = ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          path, spark.sessionState.newHadoopConf()),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new org.apache.parquet.hadoop.Footer(path, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(dir.toString)
+    }
+  }
+
+  /** Make the shared SparkSession's temp views this context's: re-sync
+    * Spark's current database, drop every installed name that
+    * [[registrations]] does not list (another database's or session's
+    * table, or one DROP or ROLLBACK removed), and [[install]] the rest.
+    * After no write this rebuilds nothing; after a write, only the
+    * registrations whose inputs moved or that Spark no longer holds as
+    * installed, and the views that read them. Two contexts alternating
+    * databases on the shared SparkSession's single temp-view namespace
+    * rebuild each other's tables on every turn, serialized under the reg
+    * write lock; a per-context `SparkSession.newSession()` would remove
+    * that at the cost of per-session conf and extension plumbing. */
+  def registerAll(): Unit = withRegWrite {
+    // Spark's current database is session-global: a sibling context or
+    // GraftSession (or a fresh constructor's USE graft) may have moved
+    // it — re-sync so qualified resolution tracks THIS context's database
+    if (spark.catalog.currentDatabase != ctx.dbName) {
+      // a wire context bound at startup may target a database no `\c`
+      // ever mirrored into Spark's catalog — create the namespace first
+      spark.sql(s"CREATE DATABASE IF NOT EXISTS ${ctx.dbName}")
+      spark.sql(s"USE ${ctx.dbName}")
+    }
+    val regs = registrations
+    strays(regs).foreach { n =>
+      spark.catalog.dropTempView(n)
+      GraftSession.installed.remove(n)
+    }
+    regs.foreach(install)
+  }
+
+  /** Installed names that `regs` does not list. */
+  private def strays(regs: Seq[Registration]): Iterable[String] = {
+    val names = regs.iterator.map(_.name).toSet
+    GraftSession.installed.keySet.asScala.filterNot(names).toSeq
+  }
+
+  /** True when the registration standing at `r.name` was built from
+    * `r.inputs` and is still what Spark resolves: the session catalog
+    * holds the very relation installed then, and every temp view that
+    * relation read still holds the relation it read. A view's analyzed
+    * plan inlines the views it reads, so it goes stale when one of them
+    * is rebuilt; a relation is replaced by a sibling session's
+    * registration, MatviewMaintenance's streaming shadow of a base table,
+    * or DROP's drop. */
+  private def current(r: Registration): Boolean = {
+    val sc = spark.sessionState.catalog
+    def holds(n: String, rel: AnyRef): Boolean = sc.getRawTempView(n).exists(_ eq rel)
+    val prev = GraftSession.installed.get(r.name)
+    prev != null && prev.inputs == r.inputs && holds(r.name, prev.relation) &&
+      prev.reads.forall { case (n, rel) => holds(n, rel) }
+  }
+
+  /** Build and install `r` as its temp view unless it is [[current]],
+    * recording what it was built from and which temp views it read; a
+    * registration with nothing to read is dropped instead. */
+  private def install(r: Registration): Unit = if (!current(r)) r.build() match {
+    case None =>
+      // stays uninstalled, so every registerAll retries it
+      spark.catalog.dropTempView(r.name)
+      GraftSession.installed.remove(r.name)
+    case Some(df) =>
+      val sc = spark.sessionState.catalog
+      df.createOrReplaceTempView(r.name)
+      val reads = df.queryExecution.analyzed.collectWithSubqueries {
+        case v: View if v.isTempView => v.desc.identifier.table
+      }.distinct.flatMap(n => sc.getRawTempView(n).map(n -> (_: AnyRef)))
+      GraftSession.installed.put(r.name,
+        GraftSession.Installed(r.inputs, sc.getRawTempView(r.name).get, reads))
   }
 
   /** attnum: 1-based position among VISIBLE columns, matching
@@ -708,37 +720,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * range. */
   private def relOid(name: String): Long =
     16384L + (scala.util.hashing.MurmurHash3.stringHash(name).toLong & 0x7fffffffL)
-
-  /** Catalog tables whose contents never change over a session's life —
-    * registered once (reference kv/PgCatalogManager.java doc list:
-    * pg_database, pg_roles, pg_am, pg_tablespace, pg_operator,
-    * pg_description). */
-  private def registerStaticPgCatalog(): Unit = {
-    if (staticPgRegistered) return
-    import spark.implicits._
-    registerPgDatabase() // dynamic: CREATE/DROP DATABASE re-register it
-    Seq((10L, "graft", true, true))
-      .toDF("oid", "rolname", "rolsuper", "rolcanlogin")
-      .createOrReplaceTempView("pg_roles")
-    Seq((2L, "heap", "t"), (403L, "btree", "i"), (405L, "hash", "i"))
-      .toDF("oid", "amname", "amtype").createOrReplaceTempView("pg_am")
-    Seq((1663L, "pg_default"), (1664L, "pg_global"))
-      .toDF("oid", "spcname").createOrReplaceTempView("pg_tablespace")
-    Seq("=", "<>", "<", "<=", ">", ">=", "+", "-", "*", "/", "%", "||",
-      "~~", "!~~", "~", "~*", "!~", "!~*", "->", "->>", "#>", "#>>")
-      .zipWithIndex.map { case (op, i) => (91L + i, op) }
-      .toDF("oid", "oprname").createOrReplaceTempView("pg_operator")
-    // COMMENT ON is unsupported (as in the reference) — the table exists
-    // and is empty so introspection joins resolve instead of erroring
-    Seq.empty[(Long, Long, Int, String)]
-      .toDF("objoid", "classoid", "objsubid", "description")
-      .createOrReplaceTempView("pg_description")
-    staticPgRegistered = true
-  }
-
-  private var staticPgRegistered = false
-
-  private var pgProcRegistered = false
 
   // --------------------------------------------------------------- route
 
@@ -763,16 +744,16 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
   private def rewriteForCtx(q: String): String =
     PgRewrite.rewrite(PgRewrite.bindCurrentDatabase(q, ctx.dbName))
 
-  /** True when the shared SparkSession's temp-view registrations are
-    * already correct for THIS context — exactly the conditions under
-    * which [[registerAll]] would fast-path out without mutating
-    * anything. Read under [[regRW]]'s read side so the answer cannot go
-    * stale mid-analysis. */
+  /** True when [[registerAll]] would change nothing: Spark's current
+    * database is this context's, every one of [[registrations]] is
+    * [[current]], and no other name is installed. Builds nothing, reads
+    * no file and runs no Spark job. Read under [[regRW]]'s read side so
+    * the answer cannot go stale mid-analysis. */
   private def registrationsCurrent: Boolean =
-    spark.catalog.currentDatabase == ctx.dbName &&
-      GraftSession.lastRegistrar.get() == regTag &&
-      GraftSession.lastPgRegistrar.get() ==
-        ((this: AnyRef, ctx.cat: AnyRef, catalog.generation))
+    spark.catalog.currentDatabase == ctx.dbName && {
+      val regs = registrations
+      regs.forall(current) && strays(regs).isEmpty
+    }
 
   /** Analyze a query atomically with temp-view registration: two
     * contexts in different databases may hold the gate's READ side
@@ -800,8 +781,8 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       try registerAll() finally w.unlock()
       attempts += 1
     }
-    // contended fallback — siblings alternating databases can invalidate
-    // the tag between our registerAll and re-check; registering AND
+    // contended fallback — siblings alternating databases can replace
+    // our temp views between our registerAll and re-check; registering AND
     // analyzing under the write side is always correct, just serialized
     val w = regRW.writeLock()
     w.lock()
@@ -812,7 +793,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
 
   /** Concurrent temp-view registration guard: readers running in
     * parallel under [[withStatementLock]]'s read side may both find the
-    * registration tag stale after a DDL and rebuild — the WRITE side
+    * registrations stale after a DDL and rebuild — the WRITE side
     * serializes the rebuild so createOrReplaceTempView calls cannot
     * interleave mid-rebuild, while the READ side lets already-current
     * readers ANALYZE concurrently (see [[planQuery]] — spanning analysis
@@ -1006,13 +987,14 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
 
   /** Revert catalog + data files to `snap` (shared by full ROLLBACK and
     * ROLLBACK TO SAVEPOINT — the savepoint case keeps the transaction
-    * open, the full case clears it at the call site). */
-  private def restoreSnapshot(snap: TxnSnapshot): Unit = {
-    // temp views registered for tables/views created after the snapshot
-    // must not outlive the rollback
-    val keep = (snap.tables.map(_._1) ++ snap.views.map(_._1)).toSet
-    (catalog.tables.keySet ++ catalog.views.keySet)
-      .filterNot(keep).foreach(spark.catalog.dropTempView(_))
+    * open, the full case clears it at the call site), then delete the
+    * version dirs no snapshot needs. `live` are the other snapshots a
+    * later ROLLBACK or ROLLBACK TO can still restore: BEGIN's and the
+    * savepoints that remain. */
+  private def restoreSnapshot(snap: TxnSnapshot, live: Seq[TxnSnapshot]): Unit = {
+    val written = (catalog.tables.values.map(_.name) ++ snap.tables.map(_._1)).toSet
+    val viewsWritten = (catalog.views.values.filter(_.materialized).map(_.name) ++
+      snap.views.collect { case (_, v) if v.materialized => v.name }).toSet
     catalog.restore(snap.tables, snap.views, snap.enums, snap.seqNames)
     // un-append: INSERT/COPY wrote part-files into snapshot dirs that
     // predate the snapshot — remove exactly the files it did not see
@@ -1021,7 +1003,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         val dir = catalog.tableDir(t)
         val extra = listDir(dir) -- had
         extra.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-        if (extra.nonEmpty) { GraftSession.appended(dir.getParent); Some(name) } else None
+        if (extra.nonEmpty) { GraftSession.installed.remove(name); Some(name) } else None
       }
     }.toSet
     // maintainers may hold state built from rolled-back rows
@@ -1031,6 +1013,26 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // design) — the affected views' checkpoints must be rebuilt, or
     // the next refresh would republish rolled-back rows from state
     graft.streaming.MatviewMaintenance.onBaseFilesRemoved(this, unAppended)
+    // the version dirs the rolled-back statements published are
+    // unpublished now: delete each name's versions above the newest one
+    // any restorable snapshot points at (a DROP inside the transaction
+    // keeps the dropped table's versions for BEGIN's snapshot), except
+    // versions a reader or a checkpoint pins
+    val snaps = snap +: live
+    def newest(vs: Seq[(String, Long)]) = vs.groupMapReduce(_._1)(_._2)(_ max _)
+    val keepTables = newest(snaps.flatMap(_.tables.map { case (_, t) => t.name -> t.version }))
+    val keepViews = newest(snaps.flatMap(_.views.collect {
+      case (_, v) if v.materialized => v.name -> v.version
+    }))
+    val pinned = checkpointPinnedVersions() ++ readerPinnedVersions()
+    def unpublish(rootName: String, keep: Option[Long], pinKey: String): Unit =
+      listDir(catalog.root.resolve(rootName)).foreach {
+        case n @ versionDirRe(k) if keep.forall(_ < k.toLong) && !pinned((pinKey, k.toLong)) =>
+          deleteRecursively(catalog.root.resolve(rootName).resolve(n))
+        case _ =>
+      }
+    written.foreach(n => unpublish(n, keepTables.get(n), n))
+    viewsWritten.foreach(n => unpublish("_mv_" + n, keepViews.get(n), n))
   }
 
   private def rollbackTxn(): DataFrame = activeTxn match {
@@ -1040,7 +1042,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       activeTxnDb = null
       activeTxnCtx = null
       savepoints = Nil
-      restoreSnapshot(snap)
+      restoreSnapshot(snap, Nil)
       dropTxnJournal()
       ok("ROLLBACK")
   }
@@ -1079,8 +1081,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     val name = lastWord(stmt).toLowerCase
     val at = savepoints.indexWhere(_._1 == name)
     require(at >= 0, s"savepoint \"$name\" does not exist")
-    restoreSnapshot(savepoints(at)._2)
-    savepoints = savepoints.drop(at) // keep the target savepoint itself
+    val kept = savepoints.drop(at) // keep the target savepoint itself
+    restoreSnapshot(kept.head._2, activeTxn.toSeq ++ kept.tail.map(_._2))
+    savepoints = kept
     ok("ROLLBACK")
   }
 
@@ -1259,10 +1262,11 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     if (Files.exists(f)) Files.readString(f).trim.toLong else 0L
   }
 
-  /** The version a new table `name` starts at: past every `v<n>`
-    * snapshot dir a dropped or rolled-back table of the same name left in
-    * its directory (DROP TABLE keeps them so a ROLLBACK can restore the
-    * table), so the new table starts empty and nothing is deleted. */
+  /** The version a new table starts at, given its storage dir `name`:
+    * past every `v<n>` snapshot dir a dropped or rolled-back table of the
+    * same name left in its directory (DROP TABLE keeps them so a ROLLBACK
+    * can restore the table), so the new table starts empty and nothing is
+    * deleted. A new matview's snapshot root uses it the same way. */
   private def firstVersion(name: String): Long =
     listDir(catalog.root.resolve(name)).collect { case versionDirRe(n) => n.toLong + 1 }
       .foldLeft(0L)(math.max)
@@ -1278,14 +1282,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     require(!Seq("_db_", "_mv_", "_ckpt_", "_txn_").exists(name.startsWith),
       s"table name $name is reserved: names starting with _db_, _mv_, _ckpt_ or _txn_ " +
         "are the engine's own storage")
-
-  /** Drop the per-directory state held for the tables under `dir` (one
-    * table's directory, or a whole database root): their point-lookup
-    * indexes and append counts. */
-  private def releaseTableState(dir: Path): Unit = {
-    PointLookup.release(dir)
-    GraftSession.forgetAppends(dir)
-  }
 
   private def deleteRecursively(p: Path): Unit = {
     if (!Files.exists(p)) return
@@ -1562,32 +1558,10 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       case Some(w) => Seq(requireTable(w.replaceAll("\"", "")))
       case None => catalog.tables.values.toSeq
     }
+    // the stats are an input of pg_stats and of each analyzed table's
+    // registration, so the next statement re-registers those
     targets.foreach(analyzeTable)
-    // the new stats map moves registerAll's tag, and each table's stats
-    // entry is an input of its registration, so fresh stats
-    // broadcast-hint the views that need it
-    registerPgStats()
     ok("ANALYZE", targets.size.toLong)
-  }
-
-  /** pg_stats-lite: one row per ANALYZEd column (reference
-    * kv/PgCatalogManager emulation scope; PG exposes the same numbers
-    * through pg_stats/pg_class.reltuples). */
-  private def registerPgStats(): Unit = {
-    import spark.implicits._
-    statsCache.toSeq.flatMap { case (k, st) =>
-      // show only the CURRENT database's rows, bare-named (PG's pg_stats
-      // is per-database)
-      val (db, tn) =
-        if (k.contains(".")) { val p = k.split("\\.", 2); (p(0), p(1)) }
-        else ("graft", k)
-      if (db != ctx.dbName) Nil
-      else st.cols.map { case (c, ndv, nulls) =>
-        (tn, c, st.rowCount, ndv,
-          if (st.rowCount == 0) 0.0 else nulls.toDouble / st.rowCount)
-      }
-    }.toDF("tablename", "attname", "reltuples", "n_distinct", "null_frac")
-      .createOrReplaceTempView("pg_stats")
   }
 
   private def execOne(stmt: String): DataFrame =
@@ -1890,7 +1864,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         names.split(",").map(_.trim.replaceAll("\"", "").toLowerCase).foreach { n =>
           if (catalog.getTable(n).isEmpty && ifEx == null)
             throw new IllegalArgumentException(s"no such table: $n")
-          catalog.getTable(n).foreach(t => releaseTableState(catalog.tableDir(t).getParent))
+          catalog.getTable(n).foreach(t => PointLookup.release(catalog.tableDir(t).getParent))
           catalog.dropTable(n)
           spark.catalog.dropTempView(n)
         }
@@ -1909,7 +1883,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       // A rolled-back transaction's publish can have left that dir behind
       // with its rows; the write verbs overwrite it, TRUNCATE empties it
       val nt = t.copy(version = t.version + 1)
-      releaseTableState(catalog.tableDir(t).getParent)
+      PointLookup.release(catalog.tableDir(t).getParent)
       deleteRecursively(catalog.tableDir(nt))
       Files.createDirectories(catalog.tableDir(nt))
       catalog.putTable(nt)
@@ -1937,7 +1911,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       s"relation exists: $newName")
     requireStorageName(newName)
     val oldDir = catalog.root.resolve(t.name)
-    releaseTableState(oldDir)
+    PointLookup.release(oldDir)
     if (Files.exists(oldDir)) Files.move(oldDir, catalog.root.resolve(newName))
     t.columns.filter(_.serial).foreach { c =>
       val oldSeq = s"${t.name}_${c.name}_seq"
@@ -2304,7 +2278,10 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         // a redefinition must not inherit maintenance state built for the
         // old SQL (no-op for a fresh name)
         graft.streaming.MatviewMaintenance.onViewChanged(this, name)
-        val v = ViewDef(name, body.trim, materialized = mat != null)
+        // a matview's first snapshot goes past the ones a dropped or
+        // replaced matview of the same name left for ROLLBACK or a reader
+        val v = ViewDef(name, body.trim, materialized = mat != null,
+          version = if (mat != null) firstVersion("_mv_" + name) else 0L)
         catalog.putView(v)
         if (v.materialized) materialize(v)
         ok("CREATE VIEW")
@@ -4036,70 +4013,25 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
         if (!n.startsWith("_") && !n.startsWith("."))
           { Files.move(f, dir.resolve(n)); () }
       } finally s.close()
-      GraftSession.appended(dir.getParent)
+      // the table's registration read the listing this append changed
+      GraftSession.installed.remove(t.name)
       res
     } finally deleteRecursively(stage)
   }
 }
 
 object GraftSession {
-  /** (session identity, catalog identity, catalog generation) of the last
-    * pg_catalog registration on the shared SparkSession — see
-    * registerPgCatalog. Catalog identity distinguishes databases: two
-    * catalogs of one session can share a generation number. */
-  private[sqlfront] val lastPgRegistrar =
-    new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, Long)](null)
-
-  /** (session identity, catalog identity, pg_catalog metadata) of the
-    * last registration of the metadata-derived pg_catalog views — see
-    * registerPgCatalog. */
-  private[sqlfront] val lastPgMetaRegistrar =
-    new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, AnyRef)](null)
-
-  /** The tag (see regTag) of the last table/view registration that
-    * completed — see registerAll. */
-  private[sqlfront] val lastRegistrar =
-    new java.util.concurrent.atomic.AtomicReference[(AnyRef, AnyRef, Long, AnyRef, AnyRef)](null)
-
-  /** Table directory → number of appends into its snapshot dirs:
-    * INSERT/COPY moving part files in, and ROLLBACK removing them. Neither
-    * moves the table's version, yet each changes the file listing a
-    * registered temp view captured, so the count is an input of the
-    * table's registration. Global, like the temp views: a sibling
-    * session's append to a shared warehouse counts too. */
-  private[sqlfront] val appends =
-    new java.util.concurrent.atomic.AtomicReference[Map[String, Long]](Map.empty)
-
-  private[sqlfront] def appended(tableDir: Path): Unit = {
-    val d = tableDir.toString
-    appends.updateAndGet(m => m.updated(d, m.getOrElse(d, 0L) + 1))
-  }
-
-  /** Remove the append counts of `dir` and every table directory under
-    * it, when DROP, TRUNCATE, RENAME or DROP DATABASE retire them. */
-  private[sqlfront] def forgetAppends(dir: Path): Unit = {
-    val d = dir.toString
-    appends.updateAndGet(_.filterNot { case (k, _) => k == d || k.startsWith(d + "/") })
-  }
-
-  /** A standing temp-view registration: the catalog and inputs it was
-    * built from, the relation Spark's session catalog got, and the temp
-    * views (name → relation) its plan read. */
-  private[sqlfront] final case class Installed(key: Any, relation: AnyRef,
+  /** A standing temp-view registration: the inputs it was built from,
+    * the relation Spark's session catalog got, and the temp views
+    * (name → relation) its plan read. */
+  private[sqlfront] final case class Installed(inputs: Any, relation: AnyRef,
       reads: Seq[(String, AnyRef)])
 
   /** Temp-view name → its standing registration, whichever session made
-    * it — see registerAll. */
+    * it: the only registration state (see registerAll). Temp views live
+    * on the shared SparkSession, so this map is JVM-wide too. */
   private[sqlfront] val installed =
     new java.util.concurrent.ConcurrentHashMap[String, Installed]()
-
-  /** Table/view names the last registerAll registered — the next
-    * registration for a DIFFERENT catalog sweeps names it does not
-    * define, so one database's tables never keep resolving in another
-    * (see registerAll's per-connection-binding sweep). Mutated only
-    * under the registering session's reg write lock. */
-  private[sqlfront] val lastRegisteredNames =
-    new java.util.concurrent.atomic.AtomicReference[Set[String]](Set.empty)
 }
 
 /** A connection's identity within the shared engine: its current

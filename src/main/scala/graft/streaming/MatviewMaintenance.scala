@@ -241,10 +241,6 @@ object MatviewMaintenance {
     spark.readStream.schema(schema).parquet(dir.toString)
       .select(t.visibleColumns.map(c => org.apache.spark.sql.functions.col(c.name)): _*)
       .createOrReplaceTempView(t.name)
-    // the shadow moves no registration input: without this, a stream that
-    // finds no new file publishes nothing, and the finally's registerAll
-    // would fast-path out and keep the streaming twin as the table's view
-    gs.registrationsReplaced()
     try {
       val agg = spark.sql(PgRewrite.rewrite(v.sql))
       var writer = agg.writeStream.outputMode("complete")

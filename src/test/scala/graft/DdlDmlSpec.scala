@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.Row
 import graft.sqlfront.{ConsistencySweeper, GraftSession, PgRewrite, StatementSplitter}
 
@@ -154,6 +155,66 @@ class DdlDmlSpec extends SparkSpec {
     s.sql("BEGIN; UPDATE t SET v = 'rolled back' WHERE id = 1; ROLLBACK")
     s.sql("TRUNCATE TABLE t")
     assert(s.sql("SELECT * FROM t").count() == 0)
+  }
+
+  test("ROLLBACK deletes the version directories the transaction published") {
+    val wh = Files.createTempDirectory("graft_wh")
+    val s = new GraftSession(spark, wh)
+    s.sql("CREATE TABLE t (id INT PRIMARY KEY, v TEXT)")
+    s.sql("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    s.sql("CREATE MATERIALIZED VIEW mv AS SELECT count(*) AS c FROM t")
+    def listing: Seq[String] = {
+      val w = Files.walk(wh)
+      try w.iterator().asScala.map(p => wh.relativize(p).toString)
+        .filter(p => Seq("t", "_mv_mv").exists(d => p == d || p.startsWith(d + "/")))
+        .toSeq.sorted
+      finally w.close()
+    }
+    val before = listing
+    s.sql("BEGIN; UPDATE t SET v = 'x' WHERE id = 1; INSERT INTO t VALUES (3, 'c')")
+    s.sql("DELETE FROM t WHERE id = 2; REFRESH MATERIALIZED VIEW mv")
+    s.sql("CREATE TABLE t2 (id INT)")
+    s.sql("INSERT INTO t2 VALUES (1)")
+    assert(listing != before)
+    s.sql("ROLLBACK")
+    assert(listing == before)
+    assert(!Files.exists(wh.resolve("t2").resolve("v0")))
+    s.sql("UPDATE t SET v = 'y' WHERE id = 2")
+    assert(s.sql("SELECT id, v FROM t ORDER BY id").collect().map(_.toString).toSeq ==
+      Seq("[1,a]", "[2,y]"))
+    assert(s.sql("SELECT c FROM mv").collect()(0).getLong(0) == 2L)
+  }
+
+  test("ROLLBACK TO a savepoint keeps the versions BEGIN's snapshot still restores") {
+    val s = fresh()
+    s.sql("CREATE TABLE t (id INT PRIMARY KEY, v TEXT)")
+    s.sql("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    s.sql("CREATE MATERIALIZED VIEW mv AS SELECT count(*) AS c FROM t")
+    // the re-created t and mv start above the dropped ones' versions
+    s.sql("BEGIN; DROP MATERIALIZED VIEW mv; DROP TABLE t; SAVEPOINT s")
+    s.sql("CREATE TABLE t (id INT PRIMARY KEY, v TEXT)")
+    s.sql("INSERT INTO t VALUES (7, 'n')")
+    s.sql("CREATE MATERIALIZED VIEW mv AS SELECT count(*) AS c FROM t")
+    s.sql("ROLLBACK TO s")
+    s.sql("ROLLBACK")
+    assert(s.sql("SELECT id, v FROM t ORDER BY id").collect().map(_.toString).toSeq ==
+      Seq("[1,a]", "[2,b]"))
+    assert(s.sql("SELECT c FROM mv").collect()(0).getLong(0) == 2L)
+  }
+
+  test("a matview snapshot with no part file fails only that matview's read") {
+    val wh = Files.createTempDirectory("graft_wh")
+    val s = new GraftSession(spark, wh)
+    s.sql("CREATE TABLE t (id INT PRIMARY KEY)")
+    s.sql("INSERT INTO t VALUES (1), (2)")
+    s.sql("CREATE MATERIALIZED VIEW mv AS SELECT count(*) AS c FROM t")
+    val mvRoot = wh.resolve("_mv_mv")
+    val w = Files.walk(mvRoot)
+    try w.iterator().asScala.toSeq.reverse.foreach(Files.delete) finally w.close()
+    val s2 = new GraftSession(spark, wh)
+    assert(s2.sql("SELECT count(*) FROM t").collect()(0).getLong(0) == 2L)
+    assert(intercept[Exception](s2.sql("SELECT c FROM mv").collect()).getMessage.contains("mv"))
+    assert(s2.sql("SELECT id FROM t ORDER BY id").collect().map(_.getInt(0)).toSeq == Seq(1, 2))
   }
 
   test("views and materialized views with explicit refresh") {

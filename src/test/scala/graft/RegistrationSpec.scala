@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import scala.util.Try
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 import graft.sqlfront.GraftSession
 import graft.streaming.MatviewMaintenance
@@ -155,6 +156,86 @@ class RegistrationSpec extends SparkSpec {
     assert(ids(s1) == Seq(1, 2))
     assert(Try(s1.sql("SELECT * FROM only2").collect()).isFailure)
     assert(s2.sql("SELECT count(*) FROM only2").collect()(0).getLong(0) == 0L)
+  }
+
+  test("two sessions on one SparkSession each read their own pg_database") {
+    val a = fresh()
+    a.sql("CREATE DATABASE xdb")
+    def datnames(s: GraftSession) =
+      s.sql("SELECT datname FROM pg_database ORDER BY datname").collect().map(_.getString(0)).toSeq
+    assert(datnames(a) == Seq("graft", "xdb"))
+    val b = fresh()
+    assert(datnames(b) == Seq("graft"))
+    assert(datnames(a) == Seq("graft", "xdb"))
+    b.sql("CREATE DATABASE ydb")
+    assert(datnames(b) == Seq("graft", "ydb"))
+    assert(datnames(a) == Seq("graft", "xdb"))
+  }
+
+  test("pg_settings shows a conf set with no catalog write") {
+    val s = fresh()
+    val k = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(k)
+    def setting = s.sql(s"SELECT setting FROM pg_settings WHERE name = '$k'")
+      .collect().map(_.getString(0)).toSeq
+    try {
+      assert(setting == Seq(prev))
+      val next = if (prev == "7") "9" else "7"
+      spark.conf.set(k, next)
+      assert(setting == Seq(next))
+    } finally spark.conf.set(k, prev)
+  }
+
+  test("an INSERT rebuilds the written table's plan and keeps every other registration") {
+    val s = fresh()
+    s.sql("CREATE TABLE customer (c_id BIGINT PRIMARY KEY, name TEXT)")
+    // SERIAL: the INSERT also writes the catalog (the sequence moves)
+    s.sql("CREATE TABLE orders (o_id SERIAL, c_id BIGINT)")
+    s.sql("INSERT INTO customer VALUES (1, 'a')")
+    s.sql("INSERT INTO orders (c_id) VALUES (1)")
+    assert(longs(s, "SELECT count(*) FROM orders") == Seq(1L))
+    val kept = Seq("customer", "pg_class", "pg_settings", "pg_stats", "pg_database")
+      .map(n => n -> installed(n))
+    val orders = installed("orders")
+    s.sql("INSERT INTO orders (c_id) VALUES (1), (1)")
+    assert(longs(s, "SELECT count(*) FROM orders") == Seq(3L))
+    assert(!(installed("orders") eq orders))
+    for ((n, rel) <- kept) assert(installed(n) eq rel, n)
+    // ROLLBACK's un-append rebuilds it too
+    val afterInsert = installed("orders")
+    s.sql("BEGIN; INSERT INTO orders (c_id) VALUES (1)")
+    assert(longs(s, "SELECT count(*) FROM orders") == Seq(4L))
+    s.sql("ROLLBACK")
+    assert(longs(s, "SELECT count(*) FROM orders") == Seq(3L))
+    assert(!(installed("orders") eq afterInsert))
+    assert(installed("customer") eq kept.head._2)
+  }
+
+  test("planning the first statement after a REFRESH runs no Spark job") {
+    val s = fresh()
+    s.sql("CREATE TABLE ev (id INT PRIMARY KEY, kind TEXT)")
+    s.sql("INSERT INTO ev VALUES (1, 'a'), (2, 'b'), (3, 'b')")
+    s.sql("CREATE MATERIALIZED VIEW agg AS SELECT kind, count(*) AS n FROM ev GROUP BY kind")
+    s.sql("INSERT INTO ev VALUES (4, 'c')")
+    s.sql("SELECT 1")
+    s.sql("REFRESH MATERIALIZED VIEW agg")
+    val jobs = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def drain(): Unit = org.apache.spark.graft.ListenerBusDrain.drain(spark.sparkContext)
+    drain()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val df = s.sql("SELECT 1")
+      drain()
+      assert(jobs.get == 0)
+      assert(df.collect().map(_.getInt(0)).toSeq == Seq(1))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(s.sql("SELECT kind, n FROM agg ORDER BY kind").collect().map(_.toString).toSeq ==
+      Seq("[a,1]", "[b,2]", "[c,1]"))
+    assert(spark.table("agg").schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq(("kind", "string"), ("n", "bigint")))
   }
 
   /** Run `body`, returning its result and the number of streaming queries

@@ -524,17 +524,17 @@ class SessionExtrasSpec extends SparkSpec {
   test("two sessions on one SparkSession interleave without seeing each other's tables") {
     // both warehouses define a table named `shared` with different rows; the
     // temp-view namespace on the underlying SparkSession is shared, so every
-    // statement relies on registerAll's registrar tag to detect that the
-    // OTHER session registered last and rebuild its own views (a stale-tag
-    // match here would read the other warehouse's rows).
+    // statement relies on registerAll's per-view check to see that the
+    // installed `shared` was built from the OTHER session's catalog and
+    // rebuild its own (a match here would read the other warehouse's rows).
     val s1 = fresh(); val s2 = fresh()
     s1.sql("CREATE TABLE shared (id INT PRIMARY KEY); INSERT INTO shared VALUES (1)")
     s2.sql("CREATE TABLE shared (id INT PRIMARY KEY); INSERT INTO shared VALUES (100), (200)")
     def ids(s: GraftSession) =
       s.sql("SELECT id FROM shared ORDER BY id").collect().map(_.getInt(0)).toSeq
-    // interleave with NO writes in between: the generation counters never
-    // move, so only the session-identity component of the tag forces the
-    // re-registration each ping-pong turn
+    // interleave with NO writes in between: no definition or version
+    // moves, so only the catalog identity in each table's registration
+    // inputs forces the re-registration each ping-pong turn
     assert(ids(s1) == Seq(1))
     assert(ids(s2) == Seq(100, 200))
     assert(ids(s1) == Seq(1))

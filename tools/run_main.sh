@@ -1,8 +1,12 @@
 #!/bin/bash
 # Run a graft main directly on the compiled classes (no sbt lock).
 # usage: tools/run_main.sh graft.Verify arg1 arg2 ...
-exec java -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
-  -Xmx100g --add-exports=java.base/sun.nio.ch=ALL-UNNAMED \
+# The classes come from the checkout this script sits in (build them with
+# `sbt compile` first); the heap is SPARK_DRIVER_MEM, 8g by default as in
+# build.sbt.
+repo="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+exec java -cp "$repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  "-Xmx${SPARK_DRIVER_MEM:-8g}" --add-exports=java.base/sun.nio.ch=ALL-UNNAMED \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
