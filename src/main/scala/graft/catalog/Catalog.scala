@@ -62,11 +62,13 @@ final case class EnumDef(name: String, values: Seq[String])
 /** JSON-persisted catalog, mirroring the reference SchemaManager's role.
   * Single-writer by design (SURVEY §7.4): every mutation rewrites
   * `catalog.json` atomically (write temp + move). State is tiny —
-  * metadata only, never data.
+  * metadata only, never data. `file` is the catalog file loaded and
+  * saved: `root`'s `catalog.json`, or for crash recovery the transaction
+  * journal's copy of it, read as the pre-BEGIN snapshot and never saved.
   */
-final class Catalog(val root: Path) {
+final class Catalog(val root: Path, file: Path) {
+  def this(root: Path) = this(root, root.resolve("catalog.json"))
   Files.createDirectories(root)
-  private val file = root.resolve("catalog.json")
 
   // State is held as @volatile IMMUTABLE maps swapped atomically under
   // the lock: a continuous matview maintainer reads these from its
@@ -103,12 +105,14 @@ final class Catalog(val root: Path) {
   def putEnum(e: EnumDef): Unit = synchronized { _enums = _enums.updated(e.name.toLowerCase, e); save() }
   def dropEnum(n: String): Unit = synchronized { _enums = _enums.removed(n.toLowerCase); save() }
 
-  /** Restore catalog state captured at BEGIN (single-session ROLLBACK).
-    * Version pointers flip back to the snapshot's dirs — copy-on-write
-    * means those dirs were never disturbed. Sequences are deliberately
-    * NOT restored: nextval is non-transactional (PostgreSQL semantics —
-    * rolled-back SERIAL inserts leave gaps), but sequences *created*
-    * inside the transaction are dropped (DDL is transactional). */
+  /** Restore catalog state captured at BEGIN or a savepoint (ROLLBACK,
+    * ROLLBACK TO and crash recovery). Version pointers flip back to the
+    * snapshot's dirs — copy-on-write means those dirs were never
+    * disturbed. Sequences are deliberately NOT restored: nextval is
+    * non-transactional (PostgreSQL semantics — rolled-back SERIAL inserts
+    * leave gaps, and a value a dead transaction handed out is never handed
+    * out again), but sequences *created* inside the transaction are
+    * dropped (DDL is transactional). */
   def restore(ts: Seq[(String, TableDef)], vs: Seq[(String, ViewDef)],
       es: Seq[(String, EnumDef)], sqNames: Set[String]): Unit = synchronized {
     _tables = immutable.VectorMap.from(ts)

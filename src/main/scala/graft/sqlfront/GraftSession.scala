@@ -30,6 +30,7 @@ import graft.functions.PointLookup
   * aggregates — never driver loops — before any write is published.
   */
 final class GraftSession(val spark: SparkSession, warehouse: Path) {
+  import GraftSession.{deleteRecursively, versionDirRe}
 
   // -------------------------------------------- txn crash recovery (open)
 
@@ -59,59 +60,43 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       }
     } catch { case _: Exception => false }
 
-  /** A journal pair left behind in `root` means a previous session died
-    * inside BEGIN…COMMIT on that database. Restore its pre-BEGIN catalog
-    * (version pointers flip back to the pre-txn snapshots), then un-append
-    * part-files the dead txn added to surviving snapshot dirs and
-    * invalidate matview checkpoints that may have consumed them (mirrors
-    * the reference's lock-cleanup recovery,
+  /** A journal pair left behind in `cat`'s database means a previous
+    * session died inside BEGIN…COMMIT on it. `cat` holds the catalog the
+    * dead transaction left; recovery rolls it back to the journaled
+    * pre-BEGIN snapshot with [[restoreSnapshot]] — the one restore that
+    * ROLLBACK, ROLLBACK TO and crash recovery share (mirrors the
+    * reference's lock-cleanup recovery,
     * kv/KvTransactionCoordinator.java:537-664, at single-session scope).
+    * Returns `cat`, recovered.
     *
-    * Recovery is IDEMPOTENT: the catalog journal is COPIED (not moved)
-    * over catalog.json, and journals are deleted only after the file
-    * un-append completes — catalog-journal removal is the commit point of
-    * recovery, so a crash at any intermediate step just re-runs the whole
-    * recovery on the next open.
+    * Recovery is IDEMPOTENT: restoreSnapshot restores the catalog only
+    * after every delete, and the journals are deleted only after it
+    * completes — catalog-journal removal is the commit point of recovery,
+    * so a crash at any intermediate step just re-runs the whole recovery
+    * on the next open.
     *
     * A catalog journal WITHOUT a files journal can only mean a previous
     * recovery finished the un-append and died before its commit point
     * (BEGIN arms files→owner→catalog, recovery disarms the same order).
-    * That re-run must NOT treat the missing files journal as "every table
-    * had zero files" — that would delete every part-file of every table.
-    *
-    * Checkpoint invalidation is keyed on the JOURNAL's table set (not
-    * just the dirs that had extras this run): a re-run after a
-    * mid-recovery crash finds the extras already deleted, but the
-    * checkpoints may still hold rolled-back rows — the conservative
-    * superset keeps the re-run equivalent to the first run. */
-  private def recoverTxn(root: Path): Unit = {
-    val cj = root.resolve("_txn_catalog.json")
-    val fj = root.resolve("_txn_files.json")
-    val ownerF = root.resolve("_txn_owner")
-    if (!Files.exists(cj) || txnOwnerAlive(ownerF)) return
-    val had: Option[Map[String, Set[String]]] =
-      if (!Files.exists(fj)) None // un-append already done
-      else Some(graft.catalog.Json.parse(Files.readString(fj))
-        .asInstanceOf[Map[String, Any]]
-        .map { case (k, v) => k -> v.asInstanceOf[Seq[Any]].map(_.toString).toSet })
-    Files.copy(cj, root.resolve("catalog.json"),
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    val cat = new Catalog(root) // loads the restored pre-txn state
-    had.foreach { had =>
-      cat.tables.values.foreach { t =>
-        val dir = cat.tableDir(t)
-        (listDir(dir) -- had.getOrElse(t.name, Set.empty))
-          .foreach(f => Files.deleteIfExists(dir.resolve(f)))
-      }
-      graft.streaming.MatviewMaintenance.onBaseFilesRemoved(cat, had.keySet)
+    * Its snapshot lists no files, and restoreSnapshot un-appends only the
+    * tables its snapshot lists, so the re-run deletes no part-file. */
+  private def recoverTxn(cat: Catalog): Catalog = {
+    val cj = cat.root.resolve("_txn_catalog.json")
+    val fj = cat.root.resolve("_txn_files.json")
+    val ownerF = cat.root.resolve("_txn_owner")
+    if (Files.exists(cj) && !txnOwnerAlive(ownerF)) {
+      val files =
+        if (!Files.exists(fj)) Map.empty[String, Set[String]]
+        else Json.parse(Files.readString(fj)).asInstanceOf[Map[String, Any]]
+          .map { case (k, v) => k -> v.asInstanceOf[Seq[Any]].map(_.toString).toSet }
+      restoreSnapshot(cat, snapshotOf(new Catalog(cat.root, cj), files), Nil)
       Files.deleteIfExists(fj)
+      Files.deleteIfExists(ownerF)
+      // commit point of recovery — deleted LAST
+      Files.deleteIfExists(cj)
     }
-    Files.deleteIfExists(ownerF)
-    // commit point of recovery — deleted LAST
-    Files.deleteIfExists(cj)
+    cat
   }
-
-  recoverTxn(warehouse) // the default database recovers before its catalog loads
 
   // ------------------------------------------- per-connection contexts
 
@@ -126,7 +111,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * startup path). The shared ENGINE state (statement gate, COW
     * snapshots, single-writer transaction, stats, warehouse) stays on
     * this GraftSession. */
-  private val defaultCtx = new ConnContext("graft", new Catalog(warehouse))
+  private val defaultCtx = new ConnContext("graft", recoverTxn(new Catalog(warehouse)))
 
   /** Thread-routed context override: PgWire's one-thread-per-connection
     * model means binding the connection's context to its handler thread
@@ -231,8 +216,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // closes the other half of this race)
     if (!dbExists(name))
       throw new IllegalArgumentException(s"""database "$name" does not exist""")
-    dbCatalogs.getOrElseUpdate(name,
-      { recoverTxn(dbRoot(name)); new Catalog(dbRoot(name)) })
+    dbCatalogs.getOrElseUpdate(name, recoverTxn(new Catalog(dbRoot(name))))
   }
 
   private def dbRoot(name: String): Path =
@@ -314,10 +298,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     // recursive delete of the database's whole storage namespace
     val rootDir = dbRoot(name)
     PointLookup.release(rootDir)
-    val walk = Files.walk(rootDir)
-    try walk.sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
-    finally walk.close()
+    deleteRecursively(rootDir)
     // purge AGAIN after the delete, under the catalogFor monitor: a
     // lock-free handshake that re-inserted a Catalog between the early
     // remove and the directory delete would otherwise leave a zombie
@@ -985,54 +966,67 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     savepoints = Nil; dropTxnJournal(); ok("COMMIT")
   }
 
-  /** Revert catalog + data files to `snap` (shared by full ROLLBACK and
-    * ROLLBACK TO SAVEPOINT — the savepoint case keeps the transaction
-    * open, the full case clears it at the call site), then delete the
-    * version dirs no snapshot needs. `live` are the other snapshots a
-    * later ROLLBACK or ROLLBACK TO can still restore: BEGIN's and the
-    * savepoints that remain. */
-  private def restoreSnapshot(snap: TxnSnapshot, live: Seq[TxnSnapshot]): Unit = {
-    val written = (catalog.tables.values.map(_.name) ++ snap.tables.map(_._1)).toSet
-    val viewsWritten = (catalog.views.values.filter(_.materialized).map(_.name) ++
+  /** Revert `cat`'s catalog and data files to `snap`, then delete the
+    * version dirs no snapshot needs: the one restore of ROLLBACK, ROLLBACK
+    * TO and crash recovery (ROLLBACK TO keeps the transaction open, a full
+    * ROLLBACK clears it at the call site, recovery runs on the catalog a
+    * dead transaction left). `live` are the other snapshots a later
+    * ROLLBACK or ROLLBACK TO can still restore: BEGIN's and the savepoints
+    * that remain.
+    *
+    * Every step can re-run: checkpoints are invalidated before the files
+    * they may have consumed go, and the catalog is restored last, so a
+    * crash at any step leaves the catalog the transaction wrote and its
+    * armed journal, from which crash recovery runs this again. */
+  private def restoreSnapshot(cat: Catalog, snap: TxnSnapshot, live: Seq[TxnSnapshot]): Unit = {
+    val written = (cat.tables.values.map(_.name) ++ snap.tables.map(_._1)).toSet
+    val viewsWritten = (cat.views.values.filter(_.materialized).map(_.name) ++
       snap.views.collect { case (_, v) if v.materialized => v.name }).toSet
-    catalog.restore(snap.tables, snap.views, snap.enums, snap.seqNames)
     // un-append: INSERT/COPY wrote part-files into snapshot dirs that
     // predate the snapshot — remove exactly the files it did not see
-    val unAppended = snap.files.flatMap { case (name, had) =>
-      catalog.getTable(name).flatMap { t =>
-        val dir = catalog.tableDir(t)
-        val extra = listDir(dir) -- had
-        extra.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-        if (extra.nonEmpty) { GraftSession.installed.remove(name); Some(name) } else None
-      }
-    }.toSet
+    val extra = for {
+      (_, t) <- snap.tables
+      had <- snap.files.get(t.name)
+      dir = cat.tableDir(t)
+      fs = listDir(dir) -- had
+      if fs.nonEmpty
+    } yield (t.name, dir, fs)
     // maintainers may hold state built from rolled-back rows
-    graft.streaming.MatviewMaintenance.onSnapshotChange(catalog.root.toString)
+    graft.streaming.MatviewMaintenance.onSnapshotChange(cat.root.toString)
     // file REMOVAL from a streamed base dir is invisible to the
     // checkpoint version stamp (the base listing is excluded by
     // design) — the affected views' checkpoints must be rebuilt, or
     // the next refresh would republish rolled-back rows from state
-    graft.streaming.MatviewMaintenance.onBaseFilesRemoved(this, unAppended)
+    graft.streaming.MatviewMaintenance.onBaseFilesRemoved(cat, extra.map(_._1).toSet)
+    extra.foreach { case (name, dir, fs) =>
+      fs.foreach(f => Files.deleteIfExists(dir.resolve(f)))
+      GraftSession.installed.remove(name)
+    }
     // the version dirs the rolled-back statements published are
     // unpublished now: delete each name's versions above the newest one
     // any restorable snapshot points at (a DROP inside the transaction
     // keeps the dropped table's versions for BEGIN's snapshot), except
-    // versions a reader or a checkpoint pins
+    // versions a reader or a checkpoint pins, and the storage dir itself
+    // once that leaves it empty
     val snaps = snap +: live
     def newest(vs: Seq[(String, Long)]) = vs.groupMapReduce(_._1)(_._2)(_ max _)
     val keepTables = newest(snaps.flatMap(_.tables.map { case (_, t) => t.name -> t.version }))
     val keepViews = newest(snaps.flatMap(_.views.collect {
       case (_, v) if v.materialized => v.name -> v.version
     }))
-    val pinned = checkpointPinnedVersions() ++ readerPinnedVersions()
-    def unpublish(rootName: String, keep: Option[Long], pinKey: String): Unit =
-      listDir(catalog.root.resolve(rootName)).foreach {
-        case n @ versionDirRe(k) if keep.forall(_ < k.toLong) && !pinned((pinKey, k.toLong)) =>
-          deleteRecursively(catalog.root.resolve(rootName).resolve(n))
-        case _ =>
+    val pinned = checkpointPinnedVersions(cat) ++ readerPinnedVersions()
+    def unpublish(rootName: String, keep: Option[Long], pinKey: String): Unit = {
+      val dir = cat.root.resolve(rootName)
+      val gone = listDir(dir).filter {
+        case versionDirRe(k) => keep.forall(_ < k.toLong) && !pinned((pinKey, k.toLong))
+        case _ => false
       }
+      gone.foreach(n => deleteRecursively(dir.resolve(n)))
+      if (gone.nonEmpty && listDir(dir).isEmpty) Files.deleteIfExists(dir)
+    }
     written.foreach(n => unpublish(n, keepTables.get(n), n))
     viewsWritten.foreach(n => unpublish("_mv_" + n, keepViews.get(n), n))
+    cat.restore(snap.tables, snap.views, snap.enums, snap.seqNames)
   }
 
   private def rollbackTxn(): DataFrame = activeTxn match {
@@ -1042,7 +1036,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       activeTxnDb = null
       activeTxnCtx = null
       savepoints = Nil
-      restoreSnapshot(snap, Nil)
+      restoreSnapshot(catalog, snap, Nil)
       dropTxnJournal()
       ok("ROLLBACK")
   }
@@ -1061,11 +1055,11 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * exactly PG's behavior for a lost connection). */
   private var savepoints: List[(String, TxnSnapshot)] = Nil
 
-  private def currentSnapshot(): TxnSnapshot = TxnSnapshot(
-    catalog.tables.toSeq,
-    catalog.views.toSeq,
-    catalog.enums.toSeq,
-    catalog.sequences.keySet.toSet,
+  private def snapshotOf(cat: Catalog, files: Map[String, Set[String]]): TxnSnapshot =
+    TxnSnapshot(cat.tables.toSeq, cat.views.toSeq, cat.enums.toSeq, cat.sequences.keySet.toSet,
+      files)
+
+  private def currentSnapshot(): TxnSnapshot = snapshotOf(catalog,
     catalog.tables.values.map(t => t.name -> listDir(catalog.tableDir(t))).toMap)
 
   private def savepoint(stmt: String): DataFrame = {
@@ -1082,7 +1076,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     val at = savepoints.indexWhere(_._1 == name)
     require(at >= 0, s"savepoint \"$name\" does not exist")
     val kept = savepoints.drop(at) // keep the target savepoint itself
-    restoreSnapshot(kept.head._2, activeTxn.toSeq ++ kept.tail.map(_._2))
+    restoreSnapshot(catalog, kept.head._2, activeTxn.toSeq ++ kept.tail.map(_._2))
     savepoints = kept
     ok("ROLLBACK")
   }
@@ -1271,8 +1265,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     listDir(catalog.root.resolve(name)).collect { case versionDirRe(n) => n.toLong + 1 }
       .foldLeft(0L)(math.max)
 
-  private val versionDirRe = """v(\d{1,18})""".r
-
   /** A table's storage directory is named after it, next to the
     * directories and files the engine keeps in the same database
     * directory (other databases, matview snapshots, maintenance
@@ -1283,20 +1275,6 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       s"table name $name is reserved: names starting with _db_, _mv_, _ckpt_ or _txn_ " +
         "are the engine's own storage")
 
-  private def deleteRecursively(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val s = Files.walk(p)
-    try s.sorted(java.util.Comparator.reverseOrder[Path]())
-      .forEach(f => Files.deleteIfExists(f))
-    finally s.close()
-  }
-
-  /** Snapshot versions pinned by live matview-maintenance checkpoints:
-    * each `_ckpt_<view>/_basever` stamp records the table versions its
-    * held streaming state was built from (MatviewMaintenance
-    * .versionStamp); pruning one would leave a checkpoint referencing
-    * vanished files. Stale stamps self-heal (the next refresh resets the
-    * checkpoint on mismatch), at which point a later VACUUM reclaims. */
   // --------------------------------------------------- reader version pins
 
   /** Open readers (suspended wire portals, long-lived result streams) pin
@@ -1307,8 +1285,9 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     * (coarse — a portal may read any number of tables through joins);
     * the reader releases it when drained or closed. Pins are in-memory
     * session state: a crashed reader's pin dies with the process, so
-    * retention can never leak across restarts. */
-  private val readerPins =
+    * retention can never leak across restarts. Lazy: crash recovery
+    * reads it while the session is still being constructed. */
+  private lazy val readerPins =
     new java.util.concurrent.ConcurrentHashMap[java.lang.Long, Set[(String, Long)]]()
   private val nextPinId = new java.util.concurrent.atomic.AtomicLong(1)
 
@@ -1336,10 +1315,16 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     b.result()
   }
 
-  private def checkpointPinnedVersions(): Set[(String, Long)] = {
+  /** Snapshot versions pinned by `cat`'s live matview-maintenance
+    * checkpoints: each `_ckpt_<view>/_basever` stamp records the table
+    * versions its held streaming state was built from (MatviewMaintenance
+    * .versionStamp); pruning one would leave a checkpoint referencing
+    * vanished files. Stale stamps self-heal (the next refresh resets the
+    * checkpoint on mismatch), at which point a later VACUUM reclaims. */
+  private def checkpointPinnedVersions(cat: Catalog): Set[(String, Long)] = {
     val b = Set.newBuilder[(String, Long)]
     val entry = """([\w]+):(\d+)(?::[^,]*)?""".r
-    val s = Files.list(catalog.root)
+    val s = Files.list(cat.root)
     try s.forEach { d =>
       if (d.getFileName.toString.startsWith("_ckpt_")) {
         val marker = d.resolve("_basever")
@@ -1437,22 +1422,12 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       })
     }
     val targets = resolveTargets()
-    val pinned = checkpointPinnedVersions() ++ readerPinnedVersions()
+    val pinned = checkpointPinnedVersions(catalog) ++ readerPinnedVersions()
     var removed = 0L
-    val vdir = """v(\d+)""".r
     def prune(rootName: String, current: Long, pinKey: String): Unit = {
       val tblRoot = catalog.root.resolve(rootName)
-      if (!Files.exists(tblRoot)) return
-      val all = {
-        val s = Files.list(tblRoot)
-        try {
-          val b = Seq.newBuilder[(Path, Long)]
-          s.forEach(d => d.getFileName.toString match {
-            case vdir(k) => b += ((d, k.toLong))
-            case _ =>
-          })
-          b.result()
-        } finally s.close()
+      val all = listDir(tblRoot).toSeq.collect {
+        case n @ versionDirRe(k) => (tblRoot.resolve(n), k.toLong)
       }
       val victims = all.filter { case (_, k) =>
         k < current && !pinned((pinKey, k)) }
@@ -1880,8 +1855,10 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     names.foreach { n =>
       val t = catalog.getTable(n).getOrElse(throw new IllegalArgumentException(s"no such table: $n"))
       // lazy truncate (reference: truncate-ts bump): new empty version dir.
-      // A rolled-back transaction's publish can have left that dir behind
-      // with its rows; the write verbs overwrite it, TRUNCATE empties it
+      // A crash in the middle of a publish outside a transaction can have
+      // left that dir behind with its rows (ROLLBACK and crash recovery
+      // delete what a transaction published); the write verbs overwrite
+      // it, TRUNCATE empties it
       val nt = t.copy(version = t.version + 1)
       PointLookup.release(catalog.tableDir(t).getParent)
       deleteRecursively(catalog.tableDir(nt))
@@ -4032,6 +4009,17 @@ object GraftSession {
     * on the shared SparkSession, so this map is JVM-wide too. */
   private[sqlfront] val installed =
     new java.util.concurrent.ConcurrentHashMap[String, Installed]()
+
+  /** A `v<n>` snapshot dir's name; the group is its version. */
+  private val versionDirRe = """v(\d{1,18})""".r
+
+  private[graft] def deleteRecursively(p: Path): Unit = {
+    if (!Files.exists(p)) return
+    val s = Files.walk(p)
+    try s.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(f => Files.deleteIfExists(f))
+    finally s.close()
+  }
 }
 
 /** A connection's identity within the shared engine: its current

@@ -72,27 +72,23 @@ object MatviewMaintenance {
     }
 
   /** Called when part-files are REMOVED from a table's current snapshot
-    * dir without a version bump (transaction ROLLBACK un-appending
-    * INSERT/COPY files). The base table's file listing is deliberately
+    * dir without a version bump (ROLLBACK, ROLLBACK TO or crash recovery
+    * un-appending INSERT/COPY files). The base table's file listing is deliberately
     * excluded from [[versionStamp]] — appends there are what the stream
     * consumes — so a checkpoint whose file-source log already recorded a
     * now-deleted file would pass the stamp check and keep aggregation
     * state containing rolled-back rows. Removal is outside the
     * append-only contract of a file stream, so the checkpoints of every
     * view streaming from an affected base are deleted; the next refresh
-    * rebuilds from the surviving files. */
-  def onBaseFilesRemoved(gs: GraftSession, tables: Set[String]): Unit =
-    onBaseFilesRemoved(gs.catalog, tables)
-
-  /** Catalog-addressed variant — crash recovery runs against a database
-    * root whose catalog may not be the session's live one (multi-db). */
+    * rebuilds from the surviving files. `cat` is the database's catalog,
+    * which for crash recovery is not yet the session's live one. */
   def onBaseFilesRemoved(cat: graft.catalog.Catalog, tables: Set[String]): Unit =
     cat.views.values.filter(_.materialized).foreach { v =>
       val base = v.sql match {
         case fromRe(t) => Some(t.replaceAll("\"", "").toLowerCase)
         case _ => None
       }
-      if (base.exists(tables)) deleteRec(cat.root.resolve("_ckpt_" + v.name))
+      if (base.exists(tables)) GraftSession.deleteRecursively(cat.root.resolve("_ckpt_" + v.name))
     }
 
   /** Called when a view is dropped or redefined (CREATE OR REPLACE):
@@ -102,7 +98,7 @@ object MatviewMaintenance {
   def onViewChanged(gs: GraftSession, name: String): Unit = {
     val key = (gs.catalog.root.toString, name.toLowerCase)
     active.remove(key).foreach(q => if (q.isActive) q.stop())
-    deleteRec(gs.catalog.root.resolve("_ckpt_" + name.toLowerCase))
+    GraftSession.deleteRecursively(gs.catalog.root.resolve("_ckpt_" + name.toLowerCase))
   }
 
   /** Validity stamp of a maintenance checkpoint: the version of every
@@ -208,7 +204,7 @@ object MatviewMaintenance {
     val marker = ckptRoot.resolve("_basever")
     val stamp = versionStamp(gs, v, Some(base.name))
     val moved = Files.exists(marker) && Files.readString(marker).trim != stamp
-    if (moved) deleteRec(ckptRoot)
+    if (moved) GraftSession.deleteRecursively(ckptRoot)
     Files.createDirectories(ckptRoot)
     Files.writeString(marker, stamp)
     (stamp, moved)
@@ -269,20 +265,11 @@ object MatviewMaintenance {
       case NonFatal(_) =>
         // not streamable: full recompute is always correct, and the stale
         // checkpoint must not mask the fresh state
-        deleteRec(ckptRoot)
+        GraftSession.deleteRecursively(ckptRoot)
         gs.materialize(v)
         None
     } finally {
       gs.registerAll() // restore the batch temp view over the base table
     }
-  }
-
-  private def deleteRec(p: Path): Unit = {
-    if (!Files.exists(p)) return
-    val s = Files.walk(p)
-    try {
-      s.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(f => Files.deleteIfExists(f))
-    } finally s.close()
   }
 }

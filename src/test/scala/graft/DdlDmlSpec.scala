@@ -17,6 +17,15 @@ class DdlDmlSpec extends SparkSpec {
   private def fresh(): GraftSession =
     new GraftSession(spark, Files.createTempDirectory("graft_wh"))
 
+  /** Every path under `wh` in the storage dirs `dirs`, relative and sorted. */
+  private def storageListing(wh: java.nio.file.Path, dirs: String*): Seq[String] = {
+    val w = Files.walk(wh)
+    try w.iterator().asScala.map(p => wh.relativize(p).toString)
+      .filter(p => dirs.exists(d => p == d || p.startsWith(d + "/")))
+      .toSeq.sorted
+    finally w.close()
+  }
+
   test("create table, insert, select roundtrip with types") {
     val s = fresh()
     s.sql("""CREATE TABLE users (
@@ -163,13 +172,7 @@ class DdlDmlSpec extends SparkSpec {
     s.sql("CREATE TABLE t (id INT PRIMARY KEY, v TEXT)")
     s.sql("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
     s.sql("CREATE MATERIALIZED VIEW mv AS SELECT count(*) AS c FROM t")
-    def listing: Seq[String] = {
-      val w = Files.walk(wh)
-      try w.iterator().asScala.map(p => wh.relativize(p).toString)
-        .filter(p => Seq("t", "_mv_mv").exists(d => p == d || p.startsWith(d + "/")))
-        .toSeq.sorted
-      finally w.close()
-    }
+    def listing = storageListing(wh, "t", "_mv_mv")
     val before = listing
     s.sql("BEGIN; UPDATE t SET v = 'x' WHERE id = 1; INSERT INTO t VALUES (3, 'c')")
     s.sql("DELETE FROM t WHERE id = 2; REFRESH MATERIALIZED VIEW mv")
@@ -179,6 +182,7 @@ class DdlDmlSpec extends SparkSpec {
     s.sql("ROLLBACK")
     assert(listing == before)
     assert(!Files.exists(wh.resolve("t2").resolve("v0")))
+    assert(!Files.exists(wh.resolve("t2")))
     s.sql("UPDATE t SET v = 'y' WHERE id = 2")
     assert(s.sql("SELECT id, v FROM t ORDER BY id").collect().map(_.toString).toSeq ==
       Seq("[1,a]", "[2,y]"))
@@ -1103,6 +1107,43 @@ class DdlDmlSpec extends SparkSpec {
     s2.sql("INSERT INTO acct VALUES (3, 30.0)")
     val s3 = new GraftSession(spark, wh)
     assert(s3.sql("SELECT count(*) AS c FROM acct").collect()(0).getLong(0) == 2L)
+  }
+
+  test("crash recovery deletes what the dead transaction published, as ROLLBACK does") {
+    val wh = Files.createTempDirectory("graft_wh")
+    val s1 = new GraftSession(spark, wh)
+    s1.sql("CREATE TABLE t (id INT PRIMARY KEY, v TEXT)")
+    s1.sql("INSERT INTO t VALUES (1, 'a'), (2, 'b')")
+    s1.sql("CREATE MATERIALIZED VIEW mv AS SELECT count(*) AS c FROM t")
+    def listing = storageListing(wh, "t", "_mv_mv")
+    val before = listing
+    s1.sql("BEGIN; UPDATE t SET v = 'x' WHERE id = 1; INSERT INTO t VALUES (3, 'c')")
+    s1.sql("DELETE FROM t WHERE id = 2; REFRESH MATERIALIZED VIEW mv")
+    s1.sql("CREATE TABLE t2 (id INT)")
+    s1.sql("INSERT INTO t2 VALUES (1)")
+    assert(listing != before)
+    // "crash": s1 is abandoned with the transaction open
+    val s2 = new GraftSession(spark, wh)
+    assert(listing == before)
+    assert(!Files.exists(wh.resolve("t2")))
+    assert(s2.sql("SELECT id, v FROM t ORDER BY id").collect().map(_.toString).toSeq ==
+      Seq("[1,a]", "[2,b]"))
+    assert(s2.sql("SELECT c FROM mv").collect()(0).getLong(0) == 2L)
+  }
+
+  test("crash recovery keeps the sequence values the dead transaction drew") {
+    val wh = Files.createTempDirectory("graft_wh")
+    val s1 = new GraftSession(spark, wh)
+    s1.sql("CREATE TABLE t (id SERIAL PRIMARY KEY, v TEXT)")
+    s1.sql("INSERT INTO t (v) VALUES ('a')")
+    s1.sql("BEGIN")
+    val drawn = s1.sql("INSERT INTO t (v) VALUES ('b') RETURNING id").collect()(0).getInt(0)
+    // "crash": the id was handed out, then s1 is abandoned
+    val s2 = new GraftSession(spark, wh)
+    val next = s2.sql("INSERT INTO t (v) VALUES ('c') RETURNING id").collect()(0).getInt(0)
+    assert(next > drawn, s"recovery handed out id $next again (the dead transaction drew $drawn)")
+    assert(s2.sql("SELECT v FROM t ORDER BY id").collect().map(_.getString(0)).toSeq ==
+      Seq("a", "c"))
   }
 
   test("crash DURING recovery: re-running recovery is idempotent") {
