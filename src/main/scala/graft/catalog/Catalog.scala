@@ -108,17 +108,21 @@ final class Catalog(val root: Path, file: Path) {
   /** Restore catalog state captured at BEGIN or a savepoint (ROLLBACK,
     * ROLLBACK TO and crash recovery). Version pointers flip back to the
     * snapshot's dirs — copy-on-write means those dirs were never
-    * disturbed. Sequences are deliberately NOT restored: nextval is
-    * non-transactional (PostgreSQL semantics — rolled-back SERIAL inserts
-    * leave gaps, and a value a dead transaction handed out is never handed
-    * out again), but sequences *created* inside the transaction are
-    * dropped (DDL is transactional). */
+    * disturbed. Sequence VALUES are deliberately not rolled back: nextval
+    * is non-transactional (PostgreSQL semantics — rolled-back SERIAL
+    * inserts leave gaps, and a value a dead transaction handed out is
+    * never handed out again), so a sequence in both `sqs` and the live
+    * catalog keeps its live definition and value. Sequence DDL is
+    * transactional: sequences created inside the transaction are dropped,
+    * and those it dropped (DROP SEQUENCE, or the rename a RENAME of a
+    * SERIAL column or its table makes) come back with their `sqs`
+    * definition and value. */
   def restore(ts: Seq[(String, TableDef)], vs: Seq[(String, ViewDef)],
-      es: Seq[(String, EnumDef)], sqNames: Set[String]): Unit = synchronized {
+      es: Seq[(String, EnumDef)], sqs: Seq[(String, SequenceDef)]): Unit = synchronized {
     _tables = immutable.VectorMap.from(ts)
     _views = immutable.VectorMap.from(vs)
     _enums = immutable.VectorMap.from(es)
-    _sequences = _sequences.filter { case (n, _) => sqNames.contains(n) }
+    _sequences = immutable.VectorMap.from(sqs.map { case (n, sq) => n -> _sequences.getOrElse(n, sq) })
     save()
   }
 

@@ -862,7 +862,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
       tables: Seq[(String, TableDef)],
       views: Seq[(String, graft.catalog.ViewDef)],
       enums: Seq[(String, graft.catalog.EnumDef)],
-      seqNames: Set[String],
+      sequences: Seq[(String, graft.catalog.SequenceDef)],
       files: Map[String, Set[String]])
 
   private var activeTxn: Option[TxnSnapshot] = None
@@ -1026,17 +1026,19 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     }
     written.foreach(n => unpublish(n, keepTables.get(n), n))
     viewsWritten.foreach(n => unpublish("_mv_" + n, keepViews.get(n), n))
-    cat.restore(snap.tables, snap.views, snap.enums, snap.seqNames)
+    cat.restore(snap.tables, snap.views, snap.enums, snap.sequences)
   }
 
   private def rollbackTxn(): DataFrame = activeTxn match {
     case None => ok("ROLLBACK") // PG: warning + no-op outside a txn
     case Some(snap) =>
+      // the transaction stays open until the restore completes, so a
+      // ROLLBACK that fails part-way can be retried
+      restoreSnapshot(catalog, snap, Nil)
       activeTxn = None
       activeTxnDb = null
       activeTxnCtx = null
       savepoints = Nil
-      restoreSnapshot(catalog, snap, Nil)
       dropTxnJournal()
       ok("ROLLBACK")
   }
@@ -1056,8 +1058,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
   private var savepoints: List[(String, TxnSnapshot)] = Nil
 
   private def snapshotOf(cat: Catalog, files: Map[String, Set[String]]): TxnSnapshot =
-    TxnSnapshot(cat.tables.toSeq, cat.views.toSeq, cat.enums.toSeq, cat.sequences.keySet.toSet,
-      files)
+    TxnSnapshot(cat.tables.toSeq, cat.views.toSeq, cat.enums.toSeq, cat.sequences.toSeq, files)
 
   private def currentSnapshot(): TxnSnapshot = snapshotOf(catalog,
     catalog.tables.values.map(t => t.name -> listDir(catalog.tableDir(t))).toMap)

@@ -1146,6 +1146,33 @@ class DdlDmlSpec extends SparkSpec {
       Seq("a", "c"))
   }
 
+  /** `t`'s serial sequence is renamed by RENAME COLUMN and `u`'s dropped
+    * inside the transaction that `end` closes or abandons; afterwards both
+    * sequences must be back and serve the next INSERT. */
+  private def sequenceDdlUndone(end: (java.nio.file.Path, GraftSession) => GraftSession): Unit = {
+    val wh = Files.createTempDirectory("graft_wh")
+    val s1 = new GraftSession(spark, wh)
+    s1.sql("CREATE TABLE t (id SERIAL PRIMARY KEY, v TEXT); CREATE TABLE u (id SERIAL PRIMARY KEY, v TEXT)")
+    s1.sql("INSERT INTO t (v) VALUES ('a'); INSERT INTO u (v) VALUES ('a')")
+    s1.sql("BEGIN; ALTER TABLE t RENAME COLUMN id TO k; DROP SEQUENCE u_id_seq")
+    val s2 = end(wh, s1)
+    assert(s2.catalog.sequences.keySet == Set("t_id_seq", "u_id_seq"))
+    for (n <- Seq("t", "u")) {
+      assert(s2.sql(s"INSERT INTO $n (v) VALUES ('b') RETURNING id").collect()(0).getInt(0) == 2)
+      assert(s2.sql(s"SELECT id, v FROM $n ORDER BY id").collect().map(_.toString).toSeq ==
+        Seq("[1,a]", "[2,b]"))
+    }
+  }
+
+  test("ROLLBACK brings back the sequences the transaction dropped or renamed") {
+    sequenceDdlUndone { (_, s1) => s1.sql("ROLLBACK"); s1 }
+  }
+
+  test("crash recovery brings back the sequences the dead transaction dropped or renamed") {
+    // "crash": s1 is abandoned with the transaction open
+    sequenceDdlUndone((wh, _) => new GraftSession(spark, wh))
+  }
+
   test("crash DURING recovery: re-running recovery is idempotent") {
     val wh = Files.createTempDirectory("graft_wh")
     val s1 = new GraftSession(spark, wh)
