@@ -68,7 +68,7 @@ object ScaleFixture {
     // guard also validates the stored ts type and rewrites on mismatch.
     val eventsStale = Files.exists(Paths.get(s"$out/events.parquet")) && {
       import org.apache.spark.sql.types.{LongType, StructType}
-      val tsField = spark.read.parquet(s"$out/events.parquet")
+      val tsField = Tables.readParquet(spark, s"$out/events.parquet")
         .schema.asInstanceOf[StructType].fields.find(_.name == "ts")
       tsField.exists(_.dataType == LongType)
     }

@@ -40,7 +40,9 @@ object TableDef { val RowId = "_graft_rowid" }
 
 /** Sequence metadata (reference kv/SequenceMetadata.java + CAS allocation
   * kv/SchemaManager.java:777-898 — here a single-writer counter persisted
-  * with the catalog). */
+  * with the catalog). `oid` is the sequence's identity, as PostgreSQL's
+  * sequence OID: it is fixed at creation and kept by renames (`copy`), so
+  * [[Catalog.restore]] finds a renamed sequence under its new name. */
 final case class SequenceDef(
     name: String,
     increment: Long = 1L,
@@ -48,7 +50,8 @@ final case class SequenceDef(
     minValue: Long = 1L,
     maxValue: Long = Long.MaxValue,
     cycle: Boolean = false,
-    current: Option[Long] = None) // None until first nextval
+    current: Option[Long] = None, // None until first nextval
+    oid: String = java.util.UUID.randomUUID().toString)
 
 /** View = stored SQL re-executed on read (reference kv/ViewMetadata.java);
   * matview = stored SQL + materialized snapshot refreshed explicitly
@@ -111,18 +114,21 @@ final class Catalog(val root: Path, file: Path) {
     * disturbed. Sequence VALUES are deliberately not rolled back: nextval
     * is non-transactional (PostgreSQL semantics — rolled-back SERIAL
     * inserts leave gaps, and a value a dead transaction handed out is
-    * never handed out again), so a sequence in both `sqs` and the live
-    * catalog keeps its live definition and value. Sequence DDL is
-    * transactional: sequences created inside the transaction are dropped,
-    * and those it dropped (DROP SEQUENCE, or the rename a RENAME of a
-    * SERIAL column or its table makes) come back with their `sqs`
-    * definition and value. */
+    * never handed out again), so a sequence of `sqs` that lives on keeps
+    * its live definition and value. Sequence DDL is transactional: each
+    * sequence of `sqs` is back under its `sqs` name, matched to the live
+    * catalog by `oid`, so one that a RENAME of its SERIAL column renamed
+    * keeps the values drawn before and after the rename. Sequences
+    * created inside the transaction are dropped, and those it dropped
+    * (DROP SEQUENCE) come back with their `sqs` definition and value. */
   def restore(ts: Seq[(String, TableDef)], vs: Seq[(String, ViewDef)],
       es: Seq[(String, EnumDef)], sqs: Seq[(String, SequenceDef)]): Unit = synchronized {
     _tables = immutable.VectorMap.from(ts)
     _views = immutable.VectorMap.from(vs)
     _enums = immutable.VectorMap.from(es)
-    _sequences = immutable.VectorMap.from(sqs.map { case (n, sq) => n -> _sequences.getOrElse(n, sq) })
+    val live = _sequences.values.map(sq => sq.oid -> sq).toMap
+    _sequences = immutable.VectorMap.from(sqs.map { case (n, sq) =>
+      n -> live.get(sq.oid).fold(sq)(_.copy(name = sq.name)) })
     save()
   }
 
@@ -205,7 +211,8 @@ final class Catalog(val root: Path, file: Path) {
     sb.append(sequences.values.map { q =>
       s"{${js("name")}:${js(q.name)},${js("increment")}:${q.increment}," +
         s"${js("start")}:${q.start},${js("min")}:${q.minValue},${js("max")}:${q.maxValue}," +
-        s"${js("cycle")}:${q.cycle},${js("current")}:${q.current.getOrElse("null")}}"
+        s"${js("cycle")}:${q.cycle},${js("current")}:${q.current.getOrElse("null")}," +
+        s"${js("oid")}:${js(q.oid)}}"
     }.mkString(","))
     sb.append("],\n\"views\":[")
     sb.append(views.values.map { v =>
@@ -255,7 +262,9 @@ final class Catalog(val root: Path, file: Path) {
         m("min").asInstanceOf[Number].longValue(),
         m("max").asInstanceOf[Number].longValue(),
         m("cycle").asInstanceOf[Boolean],
-        Option(m("current")).collect { case n: Number => n.longValue() })
+        Option(m("current")).collect { case n: Number => n.longValue() },
+        // a catalog written before sequences had an oid: the name stands in
+        m.get("oid").collect { case o: String => o }.getOrElse(m("name").asInstanceOf[String]))
       _sequences = _sequences.updated(q.name.toLowerCase, q)
     }
     arr("views").foreach { m =>

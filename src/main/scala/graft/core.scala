@@ -1,8 +1,14 @@
 package graft
 
+import java.io.FileNotFoundException
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{DecimalType, LongType, StructType, TimestampNTZType, TimestampType}
 
 /** A named query over the fixture tables, with an optional DuckDB-dialect
   * oracle SQL string the driver replays for the correctness gate.
@@ -29,10 +35,15 @@ object Q {
 
 trait QueryPack { def qs: Seq[Q] }
 
-/** Fixture-table access. Tables are immutable driver-generated parquet —
-  * the Spark analogue of the reference's KV table scan
-  * (reference kv/KvQueryExecutor.java:1004-1136), with Catalyst handling
-  * predicate pushdown / column pruning the reference lacked.
+/** Fixture-table access, and [[readParquet]], the read of every parquet
+  * path whose schema the catalog does not hold. Tables are immutable
+  * driver-generated parquet — the Spark analogue of the reference's KV
+  * table scan (reference kv/KvQueryExecutor.java:1004-1136), with
+  * Catalyst handling predicate pushdown / column pruning the reference
+  * lacked. The reference keeps a table's schema as catalog metadata
+  * (kv/TableMetadata.java:293-353); here a parquet file carries its own,
+  * and [[readParquet]] takes it from the file's footer on the driver, so
+  * defining a read runs no Spark job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -48,9 +59,11 @@ object Tables {
     *   - TIMESTAMP(MICROS, tz-naive): arrives as TIMESTAMP_NTZ; cast to the
     *     session-local TimestampType (session TZ is pinned UTC, so wall-clock
     *     values are unchanged) so every downstream query and oracle sees one
-    *     type regardless of which fixture generation produced the file. */
+    *     type regardless of which fixture generation produced the file.
+    * The table is read through [[readParquet]], so loading one runs no
+    * Spark job. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = readParquet(spark, s"$dir/$name.parquet")
     if (name == "events")
       df.schema("ts").dataType match {
         case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
@@ -58,6 +71,46 @@ object Tables {
         case _ => df // already session-local timestamp
       }
     else df
+  }
+
+  /** `spark.read.parquet(path)` without its schema-inference job: the
+    * schema is read from one data file's footer on the driver, with the
+    * calls Spark's inference job runs on an executor
+    * (`SchemaMergeUtils.mergeSchemasInParallel`: the footer without row
+    * groups, `ParquetFileFormat.readSchemaFromFooter`, a converter built
+    * from the session conf), so Spark's row metadata,
+    * `legacy.parquet.nanosAsLong` and the TIMESTAMP_NTZ inference rules
+    * apply as they do there. The file is the one that inference picks
+    * with schema merging off: `path` itself when it is a file, else the
+    * first data file by name of a flat directory, where names Spark's
+    * listing hides (`_` or `.` prefixed, `._COPYING_` suffixed) are not
+    * data. Anything else takes plain `spark.read.parquet(path)`: a
+    * missing path or no data file (Spark's own error), a subdirectory
+    * (partition discovery), a `_metadata`/`_common_metadata` summary
+    * file, or `spark.sql.parquet.mergeSchema` on. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    // a file lists as itself
+    val listed =
+      try p.getFileSystem(hadoopConf).listStatus(p).toSeq
+      catch { case _: FileNotFoundException => Nil }
+    def name(f: FileStatus) = f.getPath.getName
+    def hidden(n: String) =
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    val flat = !spark.sessionState.conf.isParquetSchemaMergingEnabled &&
+      !listed.exists(f => f.isDirectory ||
+        name(f).startsWith("_metadata") || name(f).startsWith("_common_metadata"))
+    val data = if (flat) listed.filterNot(f => hidden(name(f))) else Nil
+    data.minByOption(name).map { f =>
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, hadoopConf), SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(new Footer(f.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
   }
 
   /** Register every fixture table as a temp view so spark.sql queries can

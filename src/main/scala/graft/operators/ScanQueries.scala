@@ -308,7 +308,7 @@ object ScanQueries extends QueryPack {
       val scratch = graft.Scratch.dir("graft_zorder", dir)
       graft.plans.ZOrder.writeClustered(
         Tables.load(s, dir, "lineitem"), "l_partkey", "l_suppkey", scratch, 16)
-      s.read.parquet(scratch)
+      Tables.readParquet(s, scratch)
         .filter(col("l_partkey").between(200, 400) &&
           col("l_suppkey").between(20, 60))
         .groupBy(col("l_partkey"), col("l_suppkey"))
@@ -338,7 +338,7 @@ object ScanQueries extends QueryPack {
       graft.plans.ZOrder.writeClustered(
         Tables.load(s, dir, "lineitem"),
         Seq("l_partkey", "l_suppkey", "l_orderkey"), scratch, 16)
-      s.read.parquet(scratch)
+      Tables.readParquet(s, scratch)
         .filter(col("l_partkey").between(200, 400) &&
           col("l_suppkey").between(20, 60) &&
           col("l_orderkey").between(1000, 30000))

@@ -597,25 +597,14 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
     pgViews ++ tables ++ views
   }
 
-  /** A matview snapshot read with the schema its part files were written
-    * with, taken from one file's footer on the driver the way Spark's own
-    * inference reads it (`spark.read.parquet` alone infers it with a
-    * Spark job, which the first statement after every REFRESH paid).
-    * None when the snapshot has no part file to read. */
+  /** A matview snapshot, read through [[graft.Tables.readParquet]]: its
+    * schema comes from a part file's footer on the driver, so the first
+    * statement after a REFRESH runs no Spark job to infer it. None when
+    * the snapshot has no part file to read. */
   private def matviewDf(v: ViewDef): Option[DataFrame] = {
     val dir = catalog.matviewDir(v)
-    listDir(dir).find(n => n.startsWith("part-") && n.endsWith(".parquet")).map { f =>
-      import org.apache.spark.sql.execution.datasources.parquet._
-      val path = new org.apache.hadoop.fs.Path(dir.resolve(f).toUri)
-      val footer = ParquetFooterReader.readFooter(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          path, spark.sessionState.newHadoopConf()),
-        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
-      val schema = ParquetFileFormat.readSchemaFromFooter(
-        new org.apache.parquet.hadoop.Footer(path, footer),
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
-      spark.read.schema(schema).parquet(dir.toString)
-    }
+    Option.when(listDir(dir).exists(n => n.startsWith("part-") && n.endsWith(".parquet")))(
+      graft.Tables.readParquet(spark, dir.toString))
   }
 
   /** Make the shared SparkSession's temp views this context's: re-sync
@@ -2612,7 +2601,7 @@ final class GraftSession(val spark: SparkSession, warehouse: Path) {
           if (up.contains("PARQUET"))
             // parquet carries its own schema; project+cast to the
             // table's visible columns so validation sees declared types
-            spark.read.parquet(path).select(vis.map(c =>
+            graft.Tables.readParquet(spark, path).select(vis.map(c =>
               col(c.name).cast(TypeMap.toSpark(c.sqlType)).as(c.name)): _*)
           else if (up.contains("JSON")) spark.read.schema(schema).json(path)
           else spark.read.option("header", up.contains("HEADER")).schema(schema).csv(path)

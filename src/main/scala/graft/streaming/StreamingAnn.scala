@@ -58,7 +58,7 @@ object StreamingAnn {
     * publish). Returns the nlist used. */
   def refreshEpoch(spark: org.apache.spark.sql.SparkSession,
       vecStore: String, indexDir: String): Int = {
-    val all = spark.read.parquet(vecStore)
+    val all = graft.Tables.readParquet(spark, vecStore)
     val nlist = graft.operators.SimilarityQueries.ivfNlist(all.count().max(1L))
     graft.operators.SimilarityQueries.ivfAssign(all, nlist)
       .write.mode("overwrite").parquet(indexDir)
@@ -89,7 +89,7 @@ object StreamingAnn {
       val nlist = Files.readString(Paths.get(indexDir + "_nlist")).trim.toInt
       val c = graft.operators.SimilarityQueries
         .ivfCents(graft.operators.SimilarityQueries
-          .ivfVv(spark.read.parquet(vecStore)), nlist)
+          .ivfVv(graft.Tables.readParquet(spark, vecStore)), nlist)
         .localCheckpoint()
       epochCents = Some(c)
       c

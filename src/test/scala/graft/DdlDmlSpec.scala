@@ -1173,6 +1173,44 @@ class DdlDmlSpec extends SparkSpec {
     sequenceDdlUndone((wh, _) => new GraftSession(spark, wh))
   }
 
+  /** Inside a transaction, `t`'s serial ids are drawn before and after
+    * RENAME COLUMN renames its sequence (`t_id_seq` → `t_k_seq` →
+    * `t_m_seq`); `end` rolls back to a savepoint taken right after BEGIN,
+    * rolls the transaction back, or abandons it. Afterwards the sequence is
+    * `t_id_seq` again and hands out none of the drawn ids. */
+  private def renamedSequenceKeepsDrawn(end: (java.nio.file.Path, GraftSession) => GraftSession): Unit = {
+    val wh = Files.createTempDirectory("graft_wh")
+    val s1 = new GraftSession(spark, wh)
+    s1.sql("CREATE TABLE t (id SERIAL PRIMARY KEY, v TEXT)")
+    s1.sql("INSERT INTO t (v) VALUES ('a')")
+    s1.sql("BEGIN; SAVEPOINT sp")
+    def draw(s: GraftSession, v: String, col: String) =
+      s.sql(s"INSERT INTO t (v) VALUES ('$v') RETURNING $col").collect()(0).getInt(0)
+    draw(s1, "b", "id")
+    s1.sql("ALTER TABLE t RENAME COLUMN id TO k")
+    val drawn = draw(s1, "c", "k")
+    s1.sql("ALTER TABLE t RENAME COLUMN k TO m")
+    val s2 = end(wh, s1)
+    assert(s2.catalog.sequences.keySet == Set("t_id_seq"))
+    val next = draw(s2, "d", "id")
+    assert(next > drawn, s"id $next handed out again (the transaction drew up to $drawn)")
+    assert(s2.sql("SELECT v FROM t ORDER BY id").collect().map(_.getString(0)).toSeq ==
+      Seq("a", "d"))
+  }
+
+  test("ROLLBACK TO keeps the ids drawn through a sequence the transaction renamed") {
+    renamedSequenceKeepsDrawn { (_, s1) => s1.sql("ROLLBACK TO SAVEPOINT sp"); s1 }
+  }
+
+  test("ROLLBACK keeps the ids drawn through a sequence the transaction renamed") {
+    renamedSequenceKeepsDrawn { (_, s1) => s1.sql("ROLLBACK"); s1 }
+  }
+
+  test("crash recovery keeps the ids drawn through a sequence the dead transaction renamed") {
+    // "crash": s1 is abandoned with the transaction open
+    renamedSequenceKeepsDrawn((wh, _) => new GraftSession(spark, wh))
+  }
+
   test("crash DURING recovery: re-running recovery is idempotent") {
     val wh = Files.createTempDirectory("graft_wh")
     val s1 = new GraftSession(spark, wh)

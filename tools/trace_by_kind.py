@@ -9,13 +9,18 @@ statement stream with the benchmark's own generator (perfbench/ is
 imported, never written; the fixture is built under perfbench/.work/ if it
 is missing, as a run would build it), and prints for each statement kind
 of the measured window: the number of statements, their median latency,
-and the Spark jobs and job milliseconds per statement. Run it from any
-directory; --seconds must match the run's (default 15, the benchmark's).
+the Spark jobs and job milliseconds per statement, and the median
+milliseconds of each layer span the harness opens inside a statement:
+operators.shared_build (a consumer's rebuild of an evicted shared stage),
+operators.build_df (the operator call that defines the DataFrame) and
+exec.collect (running it and collecting the rows); a layer the trace never
+opens gets no column. Run it from any directory; --seconds must match the
+run's (default 15, the benchmark's).
 
 dml_mix kinds: order, execute, bind and catalog lookups, range (the
 batch's key range), matview, count, each write verb (insert, update,
 delete, upsert, merge), reject and refresh. pipeline_ops kinds: the
-operator family, and evict.
+operator's name (`SparkEntry.queries` key), and evict.
 """
 import argparse
 import hashlib
@@ -56,9 +61,15 @@ def stream_of(workload, seed, seconds):
     return p["stream"]
 
 
+# the layer spans reported per kind, with their column headers
+LAYERS = {"operators.shared_build": "shared_build_ms",
+          "operators.build_df": "build_df_ms",
+          "exec.collect": "collect_ms"}
+
+
 def kind_of(item):
     if item["via"] == "op":
-        return item["family"]
+        return item["op"]
     if item["kind"] in ("reject", "refresh", "evict"):
         return item["kind"]
     sql = item["sql"]
@@ -120,6 +131,7 @@ def main():
     # the top span of each is bench.<kind>, and its Spark jobs are
     # exec.job spans
     latency, jobs, job_ms = {}, defaultdict(int), defaultdict(float)
+    layer_ms = {name: defaultdict(float) for name in LAYERS}
     for line in open(a.trace):
         s = json.loads(line)
         if s["stmt"] < 0:
@@ -130,6 +142,8 @@ def main():
         elif s["name"] == "exec.job":
             jobs[s["stmt"]] += 1
             job_ms[s["stmt"]] += ms
+        elif s["name"] in layer_ms:
+            layer_ms[s["name"]][s["stmt"]] += ms
     if not latency:
         sys.exit(f"{a.trace}: no measured statements")
 
@@ -155,12 +169,16 @@ def main():
                 runs[lt] += first
     print(f"workload={workload} seed={a.seed} stream_sha256={digest} "
           f"statements={len(latency)}")
-    print(f"{'kind':<20}{'n':>5}{'p50_ms':>10}{'jobs/stmt':>11}{'job_ms/stmt':>13}")
+    layers = [name for name in LAYERS if layer_ms[name]]
+    print(f"{'kind':<28}{'n':>5}{'p50_ms':>10}{'jobs/stmt':>11}{'job_ms/stmt':>13}"
+          + "".join(f"{LAYERS[name]:>17}" for name in layers))
     for k in sorted(by_kind, key=lambda k: (-len(by_kind[k]), k)):
         ids = by_kind[k]
-        print(f"{k:<20}{len(ids):>5}{statistics.median(latency[i] for i in ids):>10.1f}"
+        print(f"{k:<28}{len(ids):>5}{statistics.median(latency[i] for i in ids):>10.1f}"
               f"{sum(jobs[i] for i in ids) / len(ids):>11.2f}"
-              f"{sum(job_ms[i] for i in ids) / len(ids):>13.1f}")
+              f"{sum(job_ms[i] for i in ids) / len(ids):>13.1f}"
+              + "".join(f"{statistics.median(layer_ms[name][i] for i in ids):>17.1f}"
+                        for name in layers))
     if lookups:
         print(f"\n{'table':<20}{'writes':>7}{'lookups':>9}{'lookups/write run':>19}")
         for t in sorted(lookups):
